@@ -15,54 +15,9 @@ import org.apache.spark.sql.SparkSession
   * position bias into noise the median removes.
   */
 object Bench {
-  /** tmpfs-backed Spark scratch if the host provides one, else default.
-    * SPARK_GRAFT_SCRATCH=disk forces the default-disk path — the honesty
-    * escape hatch: tmpfs is the right call for measuring engine cost on
-    * this I/O-throttled container (~13 MB/s disk writes inflate every
-    * shuffle ~10x), but a recorded disk-scratch pass documents the delta
-    * instead of hiding it. */
-  def scratchDir(): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (sys.env.get("SPARK_GRAFT_SCRATCH").contains("disk"))
-      System.getProperty("java.io.tmpdir")
-    else if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) {
-      val d = shm.resolve("graft-spark-local")
-      java.nio.file.Files.createDirectories(d)
-      d.toString
-    } else System.getProperty("java.io.tmpdir")
-  }
-
-  /** Extra session confs from `SPARK_GRAFT_CONF` ("k=v;k=v") — the A/B
-    * instrument for configuration experiments (guide §1: measure each
-    * config change in isolation before adopting it as a code default). */
-  def extraConf(b: SparkSession.Builder): SparkSession.Builder = {
-    sys.env.get("SPARK_GRAFT_CONF").foreach { s =>
-      s.split(";").map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      }
-    }
-    b
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the full machine (the driver environment is local[32]);
-    // SPARK_GRAFT_CPUS overrides for constrained local runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = extraConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill scratch on tmpfs when available: this container's
-      // disk write path is heavily throttled (~13 MB/s observed), which
-      // inflates every shuffle-heavy query ~10x; RAM-backed local dirs
-      // reflect actual engine cost (sf0.1 shuffles are MBs, the box has
-      // 128 GiB)
-      .config("spark.local.dir", Bench.scratchDir()))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     // SPARK_GRAFT_ONLY=q27_exact_dedup,q1_pricing_summary: run a subset
     // (isolation/debugging); unset = all queries
@@ -86,7 +41,10 @@ object Bench {
     def onePass(order: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]): Seq[(String, Double)] =
       order.map { case (name, fn) =>
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+        val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          false
+        }
         // a failed query must NOT read as a fast query: -1 sentinel
         name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
       }
@@ -106,14 +64,13 @@ object Bench {
     // 10x) — fall back to a single timed pass and let the warm-up stand in
     // as a second sample.
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    // the fallback threshold is env-tunable ONLY so the degraded-line shape
-    // is demonstrable on a healthy host (BENCH_NOTES). Recalibrated r13:
-    // the warm-up pass now also BUILDS the suite fixture caches (q175/q178
-    // layouts, q206's frozen k-means trains) — ~85 s of one-time work the
-    // timed passes deliberately reuse — so a healthy warm-up runs ~270 s
-    // against a ~185 s timed pass; the old 240 flagged every healthy run.
-    // 420 ≈ 2.3× a healthy timed pass still catches the real 2×+ windows.
-    val degradeSec = sys.env.getOrElse("SPARK_GRAFT_DEGRADE_SEC", "420").toDouble
+    // Recalibrated r13: the warm-up pass now also BUILDS the suite fixture
+    // caches (q175/q178 layouts, q206's frozen k-means trains) — ~85 s of
+    // one-time work the timed passes deliberately reuse — so a healthy
+    // warm-up runs ~270 s against a ~185 s timed pass; the old 240 flagged
+    // every healthy run. 420 ≈ 2.3× a healthy timed pass still catches the
+    // real 2×+ windows.
+    val degradeSec = 420.0
     val degraded = warmupTotal > degradeSec
     val effRuns = if (degraded) 1 else math.max(1, runs)
     val passes: Seq[Map[String, Double]] =
@@ -259,24 +216,34 @@ object Bench {
 
   /** Per-query reference medians from the committed ledger
     * (`bench_history.json`, `ref` = min of the r4+ medians — see
-    * BENCH_HISTORY.md). Missing file or unparseable entries mean no
-    * isolation triggers — the bench line still emits normally. */
+    * BENCH_HISTORY.md). A missing or unreadable file means no isolation
+    * triggers (one stderr line says why) — the bench line still emits
+    * normally. */
   private def historyRefs(): Map[String, Double] = {
+    def skip(why: String): Map[String, Double] = {
+      System.err.println(s"[bench] ledger refs skipped: $why")
+      Map.empty
+    }
     val f = new java.io.File("bench_history.json")
-    if (!f.isFile) return Map.empty
+    if (!f.isFile) return skip("no bench_history.json in the working directory")
     try {
       val text = new String(java.nio.file.Files.readAllBytes(f.toPath))
       val re = """"(q[0-9]+[A-Za-z0-9_]*)":\s*\{[^}]*"ref":\s*([0-9.]+)""".r
       re.findAllMatchIn(text).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
+    } catch { case e: Throwable => skip(e.toString) }
   }
 
   /** Re-run ONE query in a fresh forked JVM (same classpath and JVM flags
     * as this one — sbt forks runs, so java.class.path is the real app
     * classpath) with warmups=3 / runs=5, and parse its median back.
-    * Returns None on launch failure, timeout (240 s), or parse failure —
-    * isolation is best-effort diagnostics, never a bench blocker. */
-  private def isolateOne(name: String, sfDir: String): Option[(String, Double)] =
+    * Returns None, with one stderr line saying why, on launch failure,
+    * timeout (240 s), or parse failure — isolation is best-effort
+    * diagnostics, never a bench blocker. */
+  private def isolateOne(name: String, sfDir: String): Option[(String, Double)] = {
+    def skip(why: String): Option[(String, Double)] = {
+      System.err.println(s"[bench] isolation of $name skipped: $why")
+      None
+    }
     try {
       val javaBin = System.getProperty("java.home") + "/bin/java"
       val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
@@ -297,11 +264,13 @@ object Bench {
       pump.setDaemon(true)
       pump.start()
       val done = proc.waitFor(240, java.util.concurrent.TimeUnit.SECONDS)
-      if (!done) { proc.destroyForcibly(); return None }
+      if (!done) { proc.destroyForcibly(); return skip("no result within 240 s") }
       pump.join(5000)
       val re = ("\"query\":\"" + java.util.regex.Pattern.quote(name) +
         "\",\"sec_median\":([0-9.]+)").r
       re.findAllMatchIn(buf.toString).toSeq.lastOption
         .map(m => name -> m.group(1).toDouble)
-    } catch { case _: Throwable => None }
+        .orElse(skip("the forked run printed no median"))
+    } catch { case e: Throwable => skip(e.toString) }
+  }
 }

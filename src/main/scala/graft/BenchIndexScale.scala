@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Growing-index scaling measurement for the incremental trio — the one
@@ -35,14 +35,7 @@ object BenchIndexScale {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val runs = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Bench.scratchDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     import graft.operators.{Curate, Dedup, Similarity}
 
     val docs = Tables.documents(spark, sfDir)
@@ -370,7 +363,7 @@ object BenchIndexScale {
       // rescan reads O(affected users' events), not O(history). Build time
       // (the clustering write) is reported as the amortized index column ---
       val histDir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(Bench.scratchDir()), s"graft_funhist_$k")
+        java.nio.file.Paths.get(Session.scratchDir()), s"graft_funhist_$k")
         .toString
       val (bHist, _) = time {
         seedEv.repartition(32, col("user_id"))
@@ -447,7 +440,7 @@ object BenchIndexScale {
             lit(nDocs)).as("dst"))
         .distinct()
       val peDir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(Bench.scratchDir()), s"graft_predge_$k").toString
+        java.nio.file.Paths.get(Session.scratchDir()), s"graft_predge_$k").toString
       val (bPushEdges, _) = time {
         pEdgesMem.repartition(32, col("src")).sortWithinPartitions("src", "dst")
           .write.mode("overwrite").parquet(peDir)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up fixture generator: replicates a driver-generated sf directory
@@ -28,14 +28,7 @@ object GenScale {
     val Array(srcDir, outDir, factorS) = args.take(3)
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1: $factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Bench.scratchDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     def tbl(name: String): DataFrame =
       spark.read.parquet(s"$srcDir/$name.parquet")

@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch plan/timing capture for the optimization rounds: runs a list of
   * registered queries in ONE warmed JVM, writes each query's
   * `.explain("formatted")` to `<outDir>/<query>_<tag>.txt`, and prints
-  * per-query timings (median of `runs` timed executions after one warmup,
-  * same `.count()` action as the bench so numbers are comparable).
+  * per-query timings and counters (median of `runs` timed executions after
+  * one warmup). The timed action materializes the FULL result into Spark's
+  * `noop` sink: a `.count()` puts an Aggregate on top and lets Catalyst
+  * drop unique-key outer joins and whole projections the caller receives.
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> <q1,q2,...|all> [runs]
   */
 object PlanDump {
@@ -18,15 +18,7 @@ object PlanDump {
       if (args(3) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val runs = if (args.length > 4) args(4).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Bench.extraConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Bench.scratchDir()))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
 
     // per-execution counters: jobs, stages, tasks, summed task time,
@@ -64,6 +56,9 @@ object PlanDump {
     def snap(): (Long, Long, Long, Long, Long) =
       (jobs.get, stages.get, tasks.get, taskMs.get, shufB.get)
 
+    def run(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+
     names.foreach { name =>
       spark.sparkContext.setJobDescription(name)
       try {
@@ -71,7 +66,7 @@ object PlanDump {
           throw new NoSuchElementException(s"unknown query: $name"))
         // warmup + plan capture (post-warmup so fixture caches are built)
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        run(fn(spark, sfDir))
         val warmSec = (System.nanoTime() - t0) / 1e9
         val plan = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -81,7 +76,7 @@ object PlanDump {
         val before = snap()
         val samples = (1 to runs).map { _ =>
           val t = System.nanoTime()
-          fn(spark, sfDir).count()
+          run(fn(spark, sfDir))
           (System.nanoTime() - t) / 1e9
         }.sorted
         Thread.sleep(300) // let async listener events drain
@@ -93,7 +88,9 @@ object PlanDump {
         println(f"""PLANDUMP {"query":"$name","warm":$warmSec%.3f,"median":$med%.3f,"min":${samples.head}%.3f,"runs":$runs,"jobs":${d(0)},"stages":${d(1)},"tasks":${d(2)},"taskMs":${d(3)},"shufB":${d(4)}}""")
       } catch {
         case e: Throwable =>
-          println(s"""PLANDUMP {"query":"$name","error":"${e.getClass.getSimpleName}"}""")
+          println("PLANDUMP " + org.json4s.jackson.Serialization.write(Map("query" -> name,
+            "error" -> e.getClass.getSimpleName, "message" -> String.valueOf(e.getMessage)))(
+            org.json4s.DefaultFormats))
       } finally spark.sparkContext.setJobDescription(null)
     }
     spark.stop()

@@ -859,22 +859,34 @@ object CorpusQueries {
       // only because the driver calls them sequentially), so the query's
       // serial job-floor latency is max(bpe, unigram) instead of the sum.
       // Both results are deterministic; thread scheduling cannot reorder
-      // either loop's internal rounds.
+      // either loop's internal rounds. Pool threads do not inherit the
+      // caller's job group, tags and description, so each future sets them
+      // again (cancellation and attribution reach its jobs) and clears them
+      // after; the zipped await fails fast, so the first failure surfaces
+      // at once, not after the other trainer finishes.
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val mergesF = Future {
+      import scala.concurrent.duration._
+      val sc = s.sparkContext
+      val props = Seq("spark.jobGroup.id", "spark.job.description",
+        "spark.job.interruptOnCancel", "spark.job.tags")
+        .map(k => k -> sc.getLocalProperty(k))
+      def inCallerJobGroup[A](body: => A): Future[A] = Future {
+        props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+        try body finally props.foreach { case (k, _) => sc.setLocalProperty(k, null) }
+      }
+      val mergesF = inCallerJobGroup {
         Vocab.bpeTrainFromCounts(wc, numMerges = 8)
           .orderBy("merge_rank").collect()
           .map(r => (r.getString(1), r.getString(2))).toSeq
       }
-      val uniSegsF = Future {
+      val uniSegsF = inCallerJobGroup {
         val uniVocab = Vocab.unigramTrainFromCounts(wc).select("piece")
         Vocab.unigramSegment(distinctW, uniVocab, 4)
           .select(col("w"), size(col("segs")).as("nseg"))
       }
-      val merges = Await.result(mergesF, Duration.Inf)
-      val uniSegs = Await.result(uniSegsF, Duration.Inf)
+      val (merges, uniSegs) =
+        Await.result(mergesF.zip(uniSegsF), 30.minutes)
       val bpeSegs = distinctW.select(col("w"),
         size(Vocab.bpeApply(Vocab.charSyms(col("w")), merges)).as("nseg"))
       def fert(segs: org.apache.spark.sql.DataFrame, tag: String) =

@@ -46,7 +46,7 @@ object PrepQueries {
   private[analytics] def scratchTempDir(prefix: String): String = {
     scratchHook
     val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.Bench.scratchDir()), prefix)
+      java.nio.file.Paths.get(graft.Session.scratchDir()), prefix)
     val prev = scratchRegistry.put(prefix, dir)
     if (prev != null) deleteRecursively(prev)
     dir.toString
@@ -70,7 +70,7 @@ object PrepQueries {
     fixtureRegistry.computeIfAbsent(s"$key|$dataDir", _ => {
       scratchHook
       val dir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.Bench.scratchDir()), s"graft_fix_${key}_")
+        java.nio.file.Paths.get(graft.Session.scratchDir()), s"graft_fix_${key}_")
       scratchRegistry.put(s"fixture|$key|$dataDir", dir)
       build(dir.toString)
       dir.toString

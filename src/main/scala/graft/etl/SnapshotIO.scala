@@ -154,17 +154,6 @@ object SnapshotIO {
       .distinct
   }
 
-  /** Replace ONLY the partitions present in `df` (written partitioned by
-    * `partitionCol`): write staging partitioned, then swap each staged
-    * partition directory into the target. Untouched partitions' files are
-    * never opened or rewritten.
-    *
-    * Swap order per partition mirrors [[replace]]: the old partition moves
-    * ASIDE (rename), the staged one renames in, the set-aside copies delete
-    * only after every swap landed — old data is never deleted before its
-    * replacement is in place, and a mid-loop crash leaves each partition
-    * either old, new, or recoverable from its `.old-…` sibling (a
-    * delete-then-rename loop would leave crashed partitions simply gone). */
   /** Fold the `batch_id` partitions of a streaming-sink state directory
     * that lie STRICTLY BELOW `upToBatchId` into the `batch_id=-1`
     * pre-history partition — the shared compaction primitive behind
@@ -192,6 +181,17 @@ object SnapshotIO {
       folded.write.partitionBy("batch_id").mode("overwrite").parquet(staging))
   }
 
+  /** Replace ONLY the partitions present in `df` (written partitioned by
+    * `partitionCol`): write staging partitioned, then swap each staged
+    * partition directory into the target. Untouched partitions' files are
+    * never opened or rewritten.
+    *
+    * Swap order per partition mirrors [[replace]]: the old partition moves
+    * ASIDE (rename), the staged one renames in, the set-aside copies delete
+    * only after every swap landed — old data is never deleted before its
+    * replacement is in place, and a mid-loop crash leaves each partition
+    * either old, new, or recoverable from its `.old-…` sibling (a
+    * delete-then-rename loop would leave crashed partitions simply gone). */
   def replacePartitions(spark: SparkSession, df: DataFrame, dir: String,
                         partitionCol: String): Unit = {
     val token = java.util.UUID.randomUUID().toString.take(8)

@@ -464,20 +464,23 @@ object Aggregates {
         Seq(min(m).cast("double").as(s"__lo_$a"),
           max(m).cast("double").as(s"__hi_$a")) }: _*).collect()(0)
     val n = bounds.getLong(0)
-    if (n == 0L || bounds.isNullAt(1))
-      // empty input (or all-null keys): the nested form numbered nothing
-      // and aggregated zero rows — same here, schema preserved
+    if (n == 0L)
+      // empty input: the nested form numbered nothing and aggregated zero
+      // rows — same here, schema preserved
       return per.limit(0).select(lit(null).cast("int").as("r_q"),
           lit(null).cast("int").as("f_q"), lit(null).cast("int").as("m_q"))
         .groupBy("r_q", "f_q", "m_q").agg(count(lit(1)).as("n_customers"))
-    val spans = metrics.zipWithIndex.map { case ((a, _), i) =>
-      val lo = bounds.getDouble(1 + 2 * i)
-      a -> (lo, bounds.getDouble(2 + 2 * i) - lo + 1.0)
+    // a metric with no min is all-null: like the nested form, its column
+    // gets a null label while the other metrics still rank
+    val spans = metrics.zipWithIndex.collect {
+      case ((a, _), i) if !bounds.isNullAt(1 + 2 * i) =>
+        val lo = bounds.getDouble(1 + 2 * i)
+        a -> (lo, bounds.getDouble(2 + 2 * i) - lo + 1.0)
     }.toMap
-    def bkt(a: String, m: Column): Column = {
-      val (lo, span) = spans(a)
-      least(floor((m.cast("double") - lit(lo)) * buckets / span).cast("int"),
-        lit(buckets - 1))
+    def bkt(a: String, m: Column): Column = spans.get(a).fold(lit(null).cast("int")) {
+      case (lo, span) =>
+        least(floor((m.cast("double") - lit(lo)) * buckets / span).cast("int"),
+          lit(buckets - 1))
     }
     val bucketed = per.select(col("*") +:
       metrics.map { case (a, m) => bkt(a, m).as(s"__bkt_$a") }: _*)
@@ -486,12 +489,15 @@ object Aggregates {
     val hist = bucketed.select(explode(array(metrics.zipWithIndex.map {
         case ((a, _), i) => struct(lit(i).as("m"), col(s"__bkt_$a").as("b"))
       }: _*)).as("mb"))
+      .filter(col("mb.b").isNotNull)
       .groupBy(col("mb.m").as("m"), col("mb.b").as("b"))
       .agg(count(lit(1)).as("cnt")).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     def offsets(i: Int): Seq[Long] = (0 until buckets)
       .scanLeft(0L)((acc, b) => acc + hist.getOrElse((i, b), 0L)).init
     val cut = metrics.zipWithIndex.foldLeft(bucketed) {
+      case (df, ((a, _), _)) if !spans.contains(a) =>
+        df.withColumn(a, lit(null).cast("int"))
       case (df, ((a, m), i)) =>
         val off = element_at(lit(offsets(i).toArray), col(s"__bkt_$a") + 1)
         val rank = off + row_number().over(

@@ -337,8 +337,12 @@ object Vocab {
     * re-evaluate the O(len * vocab-probe) array once per fold step. */
   private[graft] def segsExpr(w: Column, pieces: Seq[String],
                               maxPieceLen: Int): Column = {
-    val byLen: Map[Int, Seq[String]] = pieces.filter(_.length >= 2)
-      .filter(_.length <= maxPieceLen).distinct.groupBy(_.length)
+    // length classes in CODE POINTS, the unit of Spark's `length`/`substr`:
+    // a UTF-16 length would file a supplementary-plane piece under a class
+    // its substr slice never has, so it could never match
+    val byLen: Map[Int, Seq[String]] = pieces.filter(_ != null).distinct
+      .groupBy(p => p.codePointCount(0, p.length))
+      .filter { case (l, _) => l >= 2 && l <= maxPieceLen }
     def bestLen(p: Column): Column =
       (2 to maxPieceLen).foldLeft(lit(1): Column) { (acc, l) =>
         byLen.get(l) match {
@@ -373,7 +377,7 @@ object Vocab {
   /** The pre-r14 relational segmentation -- kept verbatim as the fallback
     * for a vocab too large to hold driver-side (outside the trained-piece
     * contract, but the operator stays total). */
-  private def unigramSegmentRelational(words: DataFrame, vocab: DataFrame,
+  private[graft] def unigramSegmentRelational(words: DataFrame, vocab: DataFrame,
                                        maxPieceLen: Int): DataFrame = {
     val poss = words.select(col("w"),
       explode(sequence(lit(1), length(col("w")))).as("__p"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the per-action fixed cost on this host/session shape: (a) a
@@ -11,12 +10,7 @@ import org.apache.spark.sql.functions._
   * bounds what composition-level work can save. */
 object JobFloor {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Bench.scratchDir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     import spark.implicits._
     val base = spark.range(1000).select(col("id"), (col("id") % 7).as("k"))
       .localCheckpoint()

@@ -343,6 +343,15 @@ class CorpusSpec extends SparkSpec {
     // no vocab piece matches anywhere: the single-char floor segments it
     assert(got("xyz") == Seq("x", "y", "z"))
     assert(got("a") == Seq("a"))
+    // a piece outside the Basic Multilingual Plane is two UTF-16 units but
+    // one character to Spark's substr: both forms must take it whole
+    val astral = Seq("xa\uD83D\uDE00y", "a\uD83D\uDE00").toDF("w")
+    val astralVocab = vocab.union(Seq("a\uD83D\uDE00").toDF("piece"))
+    def segs(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, Seq[String])].collect().toMap
+    val fast = segs(Vocab.unigramSegment(astral, astralVocab, 4))
+    assert(fast == segs(Vocab.unigramSegmentRelational(astral, astralVocab, 4)))
+    assert(fast("xa\uD83D\uDE00y") == Seq("x", "a\uD83D\uDE00", "y"), s"$fast")
     // lossless on the corpus fixture under a trained vocab
     val docs = Tables.documents(spark, sf).limit(100)
     val trained = Vocab.unigramTrain(docs, "text",

@@ -214,6 +214,23 @@ class FunnelSpec extends SparkSpec {
       s"hand check: $got")
   }
 
+  test("rfmSegments: an all-null metric gets a null label; the others still rank") {
+    val none: Option[Long] = None
+    val per = (1 to 5).map(i => (i.toLong, Option(i.toLong), none, Option(10L * i)))
+      .toDF("e", "rec", "freq", "mon")
+    def cells(r: String, f: String, m: String) =
+      Aggregates.rfmSegments(per, "e", r, f, m).collect().map { x =>
+        def q(i: Int) = if (x.isNullAt(i)) None else Some(x.getInt(i))
+        (q(0), q(1), q(2), x.getLong(3))
+      }.toSet
+    // recency ranks ascending, monetary descending, frequency all-null
+    assert(cells("rec", "freq", "mon") ==
+      (1 to 5).map(i => (Some(i), None, Some(6 - i), 1L)).toSet)
+    // an all-null recency still segments on frequency and monetary
+    assert(cells("freq", "rec", "mon") ==
+      (1 to 5).map(i => (None, Some(6 - i), Some(6 - i), 1L)).toSet)
+  }
+
   test("retention: bootstrap+delta ≡ recompute, exact even for OUT-OF-ORDER batches") {
     def tsd(d: Int) = Timestamp.valueOf(f"2026-01-$d%02d 10:00:00")
     val all = Seq(
