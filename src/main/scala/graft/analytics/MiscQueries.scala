@@ -19,8 +19,8 @@ object MiscQueries {
     // W2/O1: global synthetic entry number. The reference's
     // `ROW_NUMBER() OVER (ORDER BY (SELECT NULL))` is nondeterministic; we
     // bind it to the stable cursor order (ssg_erp_op.py:296 + O1's ORDER BY).
-    // Single-partition window — documented cost, scalable variant in
-    // Windows.globalRowNumberScalable.
+    // Single-partition window — documented cost; q92 is the scalable twin
+    // (Windows.globalRowNumberComposed).
     "q33_global_rownum" -> { (s, dir) =>
       Tables.orders(s, dir)
         .withColumn("entry_no", row_number().over(Window.orderBy(col("o_orderkey"))))

@@ -41,18 +41,8 @@ object Coercions {
   def boolOrFalse(c: Column): Column =
     coalesce(c.try_cast("boolean"), lit(false))
 
-  /** F16: per-column null replacement (`fillna`,
-    * `dags/automate_etl_with_airflow.py:81-93`). */
-  def fillDefault(c: Column, default: Any): Column =
-    coalesce(c, lit(default))
-
   /** F18: `astype(float).astype(int)` chain
     * (`dags/automate_etl_with_airflow.py:131-132`). */
   def floatThenInt(c: Column): Column =
     c.try_cast("double").try_cast("int")
-
-  /** F19: datetime reformat to the legacy string layout
-    * (`scripts/test/replicate_table.py:63-67`). */
-  def legacyTimestampString(c: Column): Column =
-    date_format(c, "yyyy-MM-dd HH:mm:ss")
 }

@@ -16,19 +16,6 @@ object Aggregates {
   def rollup(df: DataFrame, keys: Seq[String], measure: String, alias: String): DataFrame =
     df.groupBy(keys.map(col): _*).agg(sum(col(measure)).as(alias))
 
-  /** A5: avg-of-aggregates — inner per-day aggregate, outer global average
-    * (`scripts/SQL/avg_daily_orders_sales.sql:2-13`). Two-level aggregation:
-    * the outer input is one row per day, so the second agg is trivially small.
-    */
-  def avgOfAggregates(df: DataFrame, dayCol: String, aggs: Seq[(Column, String)],
-                      outer: Seq[(String, String)]): DataFrame = {
-    val inner = df.groupBy(col(dayCol)).agg(aggs.head._1.as(aggs.head._2),
-      aggs.tail.map { case (c, a) => c.as(a) }: _*)
-    inner.agg(
-      graft.functions.Rounding.roundLikeC(avg(col(outer.head._1)), 4).as(outer.head._2),
-      outer.tail.map { case (c, a) => graft.functions.Rounding.roundLikeC(avg(col(c)), 4).as(a) }: _*)
-  }
-
   /** A6/A7 + O2/O3: top-k by aggregated measure. The `orderBy.limit` pair
     * plans as TakeOrderedAndProject — each partition keeps only k rows, the
     * driver merges k×partitions rows; no global sort. */
@@ -45,11 +32,6 @@ object Aggregates {
   def pivotSum(df: DataFrame, rowKey: String, pivotCol: String,
                pivotValues: Seq[String], measure: String): DataFrame =
     df.groupBy(col(rowKey)).pivot(pivotCol, pivotValues).agg(sum(col(measure)))
-
-  /** A15: global KPI totals (`Python Data Analysis.ipynb` cell 4). */
-  def kpis(df: DataFrame, measures: Seq[(Column, String)]): DataFrame =
-    df.agg(measures.head._1.as(measures.head._2),
-      measures.tail.map { case (c, a) => c.as(a) }: _*)
 
   /** Incremental aggregate (materialized-view) maintenance with
     * retractions — the Flink/stream-warehouse primitive the reference's

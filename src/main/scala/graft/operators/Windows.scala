@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 /** Window / ordered computation operators (SURVEY §2.6, §2.7).
   *
   * All partitioned windows shuffle once on their partition keys; the one
-  * global window in the reference (W2) is kept but documented as a
-  * deliberately single-partition operation — callers at scale should prefer
-  * `globalRowNumberScalable`.
+  * global window in the reference (W2, q33) is a deliberately
+  * single-partition sort — callers at scale use [[globalRowNumberComposed]]
+  * (q92), which gives the same consecutive numbers without one.
   */
 object Windows {
 
@@ -21,21 +21,9 @@ object Windows {
       row_number().over(Window.partitionBy(partitionKeys.map(col): _*)
         .orderBy(orderCols: _*)))
 
-  /** W2: global synthetic entry number (`dags/ssg_erp_op.py:296`,
-    * `ROW_NUMBER() OVER (ORDER BY (SELECT NULL))`). Single-partition sort —
-    * faithful to the reference but NOT scalable; see
-    * [[globalRowNumberScalable]]. */
-  def globalRowNumber(df: DataFrame, alias: String = "entry_no"): DataFrame =
-    df.withColumn(alias, row_number().over(Window.orderBy(monotonically_increasing_id())))
-
-  /** Scale-safe alternative to W2: unique (not consecutive) ids without any
-    * shuffle. Determinism caveat: ids depend on partitioning, like the
-    * reference's `(SELECT NULL)` ordering, which is also nondeterministic. */
-  def globalRowNumberScalable(df: DataFrame, alias: String = "entry_no"): DataFrame =
-    df.withColumn(alias, monotonically_increasing_id())
-
   /** CONSECUTIVE global row number in `keyCol` order WITHOUT the
-    * single-partition sort [[globalRowNumber]] pays: bucket + offset
+    * single-partition sort `ROW_NUMBER() OVER (ORDER BY key)` pays (W2,
+    * `dags/ssg_erp_op.py:296`; q33 keeps that form): bucket + offset
     * composition.
     *
     *  1. Deterministic range bucketing, monotonic in the key: bucket =
