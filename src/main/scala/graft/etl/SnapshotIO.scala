@@ -24,16 +24,24 @@ object SnapshotIO {
   def exists(spark: SparkSession, dir: String): Boolean =
     fs(spark, dir).exists(new Path(dir))
 
-  /** True when the directory exists AND holds at least one parquet file —
-    * an existing-but-empty state dir (fresh checkout, cleaned run) must read
-    * as "no state", not as an unreadable snapshot. */
+  /** True when `dir` holds at least one parquet file Spark's file index
+    * would read — THE state-existence probe. An absent or parquet-free
+    * state dir (fresh checkout, compacted away, an empty first micro-batch
+    * that left only `_SUCCESS`) must read as "no state", not as an
+    * unreadable snapshot. Names starting with `_` or `.` are skipped at
+    * every level, as Spark's file index skips them: a crashed dynamic
+    * overwrite leaves `.spark-staging-*` dirs with parquet inside the
+    * target. The walk stops at the first hit. */
   def hasParquet(spark: SparkSession, dir: String): Boolean = {
     val f = fs(spark, dir)
+    def walk(p: Path): Boolean = f.listStatus(p).exists { st =>
+      val name = st.getPath.getName
+      if ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".")) false
+      else if (st.isDirectory) walk(st.getPath)
+      else name.endsWith(".parquet")
+    }
     val p = new Path(dir)
-    if (!f.exists(p)) return false
-    val it = f.listFiles(p, true)
-    while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) return true
-    false
+    f.exists(p) && walk(p)
   }
 
   /** Replace the whole snapshot: write staging, move old aside, swap
@@ -152,33 +160,6 @@ object SnapshotIO {
       .filter(s => s.isDirectory && s.getPath.getName.contains("="))
       .map(_.getPath.getName.takeWhile(_ != '='))
       .distinct
-  }
-
-  /** Fold the `batch_id` partitions of a streaming-sink state directory
-    * that lie STRICTLY BELOW `upToBatchId` into the `batch_id=-1`
-    * pre-history partition — the shared compaction primitive behind
-    * [[graft.operators.Multimodal.compactMediaIndex]] and
-    * [[graft.operators.Dedup.compactTextIndex]]. `upToBatchId` is the
-    * caller-owned REPLAY BARRIER (the smallest batch the streaming
-    * checkpoint could still replay): a replayed batch must never find its
-    * own rows folded into pre-history, or its `batch_id < N` probe cut
-    * would read them as pre-batch state. Whole-directory [[stagedSwap]] —
-    * a crash mid-compaction leaves the live state untouched. */
-  def compactBatchPartitions(spark: SparkSession, dir: String,
-                             upToBatchId: Long): Unit = {
-    require(upToBatchId >= 0,
-      s"compactBatchPartitions: upToBatchId must be >= 0, got $upToBatchId")
-    val raw = spark.read.parquet(dir)
-    require(raw.columns.contains("batch_id"),
-      s"compactBatchPartitions: $dir has no batch_id partition column — " +
-        "not a batch-partitioned sink state dir")
-    val folded = raw.withColumn("batch_id",
-      org.apache.spark.sql.functions.when(
-        org.apache.spark.sql.functions.col("batch_id") < upToBatchId,
-        org.apache.spark.sql.functions.lit(-1L))
-        .otherwise(org.apache.spark.sql.functions.col("batch_id")))
-    stagedSwap(spark, dir)(staging =>
-      folded.write.partitionBy("batch_id").mode("overwrite").parquet(staging))
   }
 
   /** Replace ONLY the partitions present in `df` (written partitioned by

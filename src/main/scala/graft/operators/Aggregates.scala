@@ -221,15 +221,11 @@ object Aggregates {
     * already-folded maximum (foreachBatch makes no cross-batch order
     * promise); here every batch routes through [[funnelAdvanceLate]] with
     * `history` = the raw events persisted by STRICTLY EARLIER batches
-    * (`stateDir/events/bid=K`, dynamic partition overwrite) and
-    * `watermark` = their running max event time (a 1-row
-    * [[graft.etl.BatchSnapshots]] snapshot), so the drained state equals
-    * the batch recompute for ANY event-time interleaving.
-    *
-    * Replay (at-least-once) safety: every read is strictly-below-K
-    * (state, watermark, history), every write dynamic-overwrites its own
-    * `bid=K` partition — a replayed batch re-derives from the same
-    * predecessors and rewrites identical bytes. Returns
+    * (`stateDir/events/bid=K`) and `watermark` = their running max event
+    * time, so the drained state equals the batch recompute for ANY
+    * event-time interleaving. State, watermark and history all follow
+    * the [[graft.etl.BatchSnapshots]] discipline
+    * ([[graft.etl.BatchSnapshots.landEventsAndWatermark]]). Returns
     * `(batch_id, n_entities)`. */
   def funnelBatch(stateDir: String, entity: Column, ts: Column,
                   steps: Seq[(String, Column)])
@@ -274,12 +270,10 @@ object Aggregates {
       .distinct()
 
   /** Streaming retention sink (`foreachBatch` target) — the q193/q197
-    * family's streaming member, the [[graft.operators.Rank.triangleBatch]]
-    * persistence discipline: each micro-batch's NEW entity-days (delta
-    * against strictly-earlier batches) land under
-    * `stateDir/days/batch_id=K` via dynamic partition overwrite, so a
-    * replayed micro-batch (foreachBatch's at-least-once delivery)
-    * rewrites its own partition with identical content instead of
+    * family's streaming member, in the [[graft.etl.BatchSnapshots]]
+    * append form: each micro-batch's NEW entity-days (the delta against
+    * strictly-earlier batches) land under `stateDir/days/batch_id=K`, so
+    * a replayed micro-batch rewrites its own partition instead of
     * double-counting. The cohort matrix reads with [[retentionMatrixFrom]]
     * at any point. Returns the batch report `(batch_id, n_days_added)`. */
   def retentionBatch(stateDir: String, entity: Column, ts: Column)
@@ -289,19 +283,11 @@ object Aggregates {
     val daysDir = s"$stateDir/days"
     val cand = batch.select(StateKeys.asLong(entity).as("_e"),
       ts.cast("date").as("_d")).distinct()
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(daysDir)
-    val old =
-      if (p.getFileSystem(hconf).exists(p))
-        spark.read.parquet(daysDir)
-          .filter(col("batch_id") < batchId).select("_e", "_d")
-      else cand.limit(0).select("_e", "_d")
+    val old = graft.etl.BatchSnapshots.allBelow(spark, daysDir, batchId,
+      "batch_id", cand.limit(0))
     val delta = cand.join(old, Seq("_e", "_d"), "left_anti").localCheckpoint()
     val nAdded = delta.count()
-    delta.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(daysDir)
+    graft.etl.BatchSnapshots.land(delta, daysDir, batchId, "batch_id")
     Seq((batchId, nAdded)).toDF("batch_id", "n_days_added")
   }
 
@@ -379,13 +365,9 @@ object Aggregates {
           .as("_cents"))
   }
 
-  /** Streaming RFM sink (`foreachBatch` target) — snapshot-per-batch
-    * persistence (the SCD2-sink discipline, not the delta-append one,
-    * because a monoid STATE has no append form): advance(K) reads the
-    * latest snapshot STRICTLY BELOW K and lands the merged state under
-    * `state/bid=K` via dynamic partition overwrite, so a replayed
-    * micro-batch re-derives from the same predecessor and rewrites its
-    * own partition with identical content. Snapshots below the replay
+  /** Streaming RFM sink (`foreachBatch` target) in the
+    * [[graft.etl.BatchSnapshots]] snapshot form under `state/bid=K` (a
+    * monoid STATE has no append form). Snapshots below the replay
     * barrier are compactable (delete `bid < K-1`); the entity-grain
     * snapshot is the honest floor for a global-rank workload. Returns
     * `(batch_id, n_entities)`. */

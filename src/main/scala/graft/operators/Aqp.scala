@@ -92,10 +92,10 @@ object Aqp {
     * member of the AQP family (sampling is closed under union, so a
     * persisted synopsis advances by sampling ONLY the arriving batch). Each
     * micro-batch's sampled rows land under their own `batch_id=N/`
-    * partition via dynamic overwrite, so an at-least-once replay REPLACES
-    * its own partition instead of double-appending (the fuzzyDedupBatch /
-    * mediaDedupBatch discipline). Dashboards read the synopsis dir and pay
-    * p of the corpus:
+    * partition ([[graft.etl.BatchSnapshots]] append form), so an
+    * at-least-once replay REPLACES its own partition instead of
+    * double-appending. Dashboards read the synopsis dir and pay p of the
+    * corpus:
     * {{{
     *   events.writeStream.foreachBatch(
     *     Aqp.synopsisBatch(dir, col("event_id"), 1, 20) _).start()
@@ -105,13 +105,9 @@ object Aqp {
     *   // the estimates equal a from-scratch sample of the full table.
     * }}} */
   def synopsisBatch(dir: String, key: Column, num: Int, den: Int)
-                   (batch: DataFrame, batchId: Long): Unit = {
-    hashSample(batch, key, num, den)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
-  }
+                   (batch: DataFrame, batchId: Long): Unit =
+    graft.etl.BatchSnapshots.land(hashSample(batch, key, num, den), dir,
+      batchId, "batch_id")
 
   /** Priority sampling (Duffield–Lund–Thorup) — the HEAVY-TAIL estimator
     * Bernoulli HT lacks: a uniform p-sample's variance blows up when a few

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.etl.BatchSnapshots
 import graft.functions.Text
 
 /** Deduplication operators for document corpora — exact (hash groupBy),
@@ -995,20 +996,14 @@ object Dedup {
 
   /** Seed a [[fuzzyDedupBatch]] state pair from an external corpus (the
     * one-time historical backfill): the banded index lands in `indexDir`
-    * and the text lands in `seenDir`, both under the `batch_id=-1`
-    * pre-history partition ([[graft.operators.Multimodal.seedMediaIndex]]'s
-    * contract on the text modality) — every micro-batch's
-    * `batch_id < batchId` probe cut includes the seed, and survivor
-    * appends never mix root files with partition dirs. */
+    * and the text in `seenDir`, both as the [[graft.etl.BatchSnapshots]]
+    * seed partition `batch_id=-1`. */
   def seedTextIndex(seen: DataFrame, indexDir: String, seenDir: String,
                     idCol: String, textCol: String): Unit = {
-    def put(df: DataFrame, dir: String): Unit =
-      df.withColumn("batch_id", lit(-1L))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
-    put(bandedSignatures(seen, idCol, textCol), indexDir)
-    put(seen.select(col(idCol), col(textCol)), seenDir)
+    BatchSnapshots.seed(bandedSignatures(seen, idCol, textCol), indexDir,
+      "batch_id")
+    BatchSnapshots.seed(seen.select(col(idCol), col(textCol)), seenDir,
+      "batch_id")
   }
 
   /** foreachBatch sink: STREAMING fuzzy (MinHash-banded) dedup with
@@ -1022,70 +1017,45 @@ object Dedup {
     *
     * Per micro-batch: probe via [[fuzzyDedupIncremental]] (banded index
     * candidates → exact Jaccard verify against candidate seen TEXT only →
-    * within-batch [[fuzzyDedup]]), append the per-doc report
-    * (id, dup_of, kept, batch_id) to `reportDir`, and ADVANCE both state
-    * dirs by appending the survivors' band rows to `indexDir` and their
-    * text to `seenDir` — O(batch) appends; the accepted corpus is never
+    * within-batch [[fuzzyDedup]]), land the per-doc report
+    * (id, dup_of, kept, batch_id) in `reportDir`, and ADVANCE both state
+    * dirs by landing the survivors' band rows in `indexDir` and their
+    * text in `seenDir` — O(batch) appends; the accepted corpus is never
     * rewritten or re-shingled.
     *
-    * Delivery: IDEMPOTENT under micro-batch retry — all three writes
-    * partition by `batch_id` with dynamic overwrite (a replay REPLACES
-    * its own partitions), and the probe reads only `batch_id < batchId`
-    * (the pre-batch state; reading this batch's own leftover partition
-    * would self-contaminate a replay). Seed external history with
-    * [[seedTextIndex]]; a flat (non-partitioned) state dir refuses
-    * loudly. Compact old partitions with [[compactTextIndex]], strictly
-    * below the replay barrier. */
+    * Delivery: replay-idempotent — all three dirs are in the
+    * [[graft.etl.BatchSnapshots]] append form under `batch_id`. Seed
+    * external history with [[seedTextIndex]]; compact with
+    * [[compactTextIndex]]. */
   def fuzzyDedupBatch(indexDir: String, seenDir: String, reportDir: String,
                       idCol: String, textCol: String, threshold: Double = 0.8)
                      (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    def hasState(dir: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && fs.listStatus(p).exists { s =>
-        val n = s.getPath.getName
-        n.endsWith(".parquet") || n.startsWith("batch_id=")
-      }
-    }
     // one lineage cut feeds probe + report + both advances (the q146 rule)
     val b = batch.localCheckpoint()
-    val (seen, idx) =
-      if (!hasState(indexDir))
-        (b.limit(0).select(col(idCol), col(textCol)),
-          bandedSignatures(b.limit(0), idCol, textCol))
-      else {
-        val rawIdx = spark.read.parquet(indexDir)
-        val rawSeen = spark.read.parquet(seenDir)
-        require(rawIdx.columns.contains("batch_id") &&
-            rawSeen.columns.contains("batch_id"),
-          s"fuzzyDedupBatch: state at $indexDir / $seenDir has no batch_id " +
-            "partition column; seed external history with seedTextIndex — a " +
-            "flat seed would break partition discovery after the first append")
-        (rawSeen.filter(col("batch_id") < batchId).drop("batch_id"),
-          rawIdx.filter(col("batch_id") < batchId).drop("batch_id"))
-      }
+    def below(dir: String, empty: DataFrame): DataFrame =
+      BatchSnapshots.allBelow(spark, dir, batchId, "batch_id", empty,
+        "seedTextIndex")
+    val seen = below(seenDir, b.limit(0).select(col(idCol), col(textCol)))
+    val idx = below(indexDir, bandedSignatures(b.limit(0), idCol, textCol))
     // batch-bounded, consumed by the report write AND the survivor joins
     val rep = fuzzyDedupIncremental(b, seen, idx, idCol, textCol, threshold)
       .localCheckpoint()
-    def put(df: DataFrame, dir: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
-    put(rep, reportDir)
+    BatchSnapshots.land(rep, reportDir, batchId, "batch_id")
     val survivors = b.join(rep.filter(col("kept")).select(idCol), Seq(idCol), "left_semi")
-    put(bandedSignatures(survivors, idCol, textCol), indexDir)
-    put(survivors.select(col(idCol), col(textCol)), seenDir)
+    BatchSnapshots.land(bandedSignatures(survivors, idCol, textCol), indexDir,
+      batchId, "batch_id")
+    BatchSnapshots.land(survivors.select(col(idCol), col(textCol)), seenDir,
+      batchId, "batch_id")
   }
 
   /** Fold a [[fuzzyDedupBatch]] state dir's per-batch partitions strictly
     * below the replay barrier into `batch_id=-1` — apply to BOTH
-    * `indexDir` and `seenDir` at the same barrier. Delegates to the shared
-    * [[graft.etl.SnapshotIO.compactBatchPartitions]] staged swap. */
+    * `indexDir` and `seenDir` at the same barrier
+    * ([[graft.etl.BatchSnapshots.compactBatchPartitions]]). */
   def compactTextIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                        upToBatchId: Long): Unit =
-    graft.etl.SnapshotIO.compactBatchPartitions(spark, dir, upToBatchId)
+    BatchSnapshots.compactBatchPartitions(spark, dir, upToBatchId)
 
   /** 60-bit SimHash over whitespace tokens. The per-bit vote is inherently
     * scalar-loop-shaped, so it runs as a typed map (one pass, no shuffle);

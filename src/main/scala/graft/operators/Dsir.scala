@@ -95,10 +95,9 @@ object Dsir {
 
   /** `foreachBatch` sink maintaining the DSIR bucket-histogram state —
     * the streaming member of the family ([[importanceWeights]] batch,
-    * [[histAdvance]] incremental): snapshot-per-batch (the rfmBatch
-    * discipline), advance(K) re-derives from the latest snapshot strictly
-    * below K and dynamic-overwrites `state/bid=K` — at-least-once replay
-    * rewrites identically; each snapshot is ≤ `buckets` rows. A caller
+    * [[histAdvance]] incremental), in the [[graft.etl.BatchSnapshots]]
+    * snapshot form under `state/bid=K`; each snapshot is ≤ `buckets`
+    * rows. A caller
     * scores any batch against [[histStateFrom]] with [[scoreWith]].
     * Returns `(batch_id, n_buckets)`. */
   def histBatch(stateDir: String, textCol: String, targetPred: Column,

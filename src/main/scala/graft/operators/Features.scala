@@ -226,11 +226,9 @@ object Features {
 
   /** `foreachBatch` sink maintaining the mini-batch k-means stat state —
     * the streaming member of the family ([[kmeansAssign]] batch,
-    * [[kmeansStatsAdvance]] incremental): snapshot-per-batch persistence
-    * (the rfmBatch discipline — a monoid state has no append form):
-    * advance(K) re-derives from the latest snapshot STRICTLY BELOW K and
-    * dynamic-overwrites `state/bid=K`, so an at-least-once replay rewrites
-    * identically. Snapshots are k×dim rows — bytes per batch. Returns
+    * [[kmeansStatsAdvance]] incremental), in the
+    * [[graft.etl.BatchSnapshots]] snapshot form under `state/bid=K`.
+    * Snapshots are k×dim rows — bytes per batch. Returns
     * `(batch_id, n_cells)`. */
   def kmeansBatch(stateDir: String, idCol: String, vecCol: String,
                   cents: Seq[(Int, Seq[Long])])

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.BatchSnapshots
+
 /** Multimodal-column plumbing: image/audio/video as opaque `binary` columns
   * with typed metadata, processed batch-wise per partition.
   *
@@ -618,63 +620,27 @@ object Multimodal {
     *       32, 32, "img") _).start()
     *
     * Per micro-batch: probe the stored index ([[mediaIncrementalPairs]] —
-    * broadcast-probe, one index scan), append the per-item report
-    * (batch_id, id, is_dup, n_matches, min_seen_id) to `reportDir`, and
-    * ADVANCE the index by appending the survivors' chunk rows to
+    * broadcast-probe, one index scan), land the per-item report
+    * (batch_id, id, is_dup, n_matches, min_seen_id) in `reportDir`, and
+    * ADVANCE the index by landing the survivors' chunk rows in
     * `indexDir` — the pure-union contract as an O(batch) parquet append;
     * the seen corpus is never rewritten.
     *
-    * Delivery: IDEMPOTENT under micro-batch retry. Both writes are
-    * partitioned by `batch_id` with DYNAMIC partition overwrite — a
-    * replayed batch REPLACES its own partition instead of re-appending
-    * (batch contents are deterministic per batchId in Structured
-    * Streaming's replay contract), so the report and the index stay
-    * duplicate-free across failures without an external ledger; the
-    * epoch-ledger DSv2 sink (`format("graft-sink")`, SinkV2) remains the
-    * multi-writer/transactional upgrade path. The per-batch probe drops
-    * the partition column before joining, so the stored layout is
-    * invisible to the probe contract. Compaction: [[compactMediaIndex]]
-    * folds partitions strictly below a caller-owned replay barrier into
-    * the batch_id=-1 pre-history partition (folding a batch the
-    * checkpoint could still replay would make a replayed batch read its
-    * own rows as pre-batch index state — the strict `<` refuses that by
-    * construction). Seed external history with [[seedMediaIndex]]. */
+    * Delivery: replay-idempotent — both dirs are in the
+    * [[graft.etl.BatchSnapshots]] append form under `batch_id`, so the
+    * report and the index stay duplicate-free across failures without an
+    * external ledger; the epoch-ledger DSv2 sink (`format("graft-sink")`,
+    * SinkV2) remains the multi-writer/transactional upgrade path. Seed
+    * external history with [[seedMediaIndex]]; compact with
+    * [[compactMediaIndex]]. */
   def mediaDedupBatch(indexDir: String, reportDir: String, idCol: String,
                       hiCol: String, loCol: String, hiBits: Int, loBits: Int,
                       modality: String, maxHamming: Int = 3)
                      (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val hasIndex = {
-      val p = new org.apache.hadoop.fs.Path(indexDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && fs.listStatus(p).exists { s =>
-        val n = s.getPath.getName
-        n.endsWith(".parquet") || n.startsWith("batch_id=")
-      }
-    }
-    // the probe must see the index AS OF batches 0..batchId-1: on a
-    // replay, this batch's OWN partition is already on disk and reading it
-    // would self-contaminate the probe (its survivors would read as dups,
-    // and the re-written partition would shrink). Streaming replays are
-    // monotone (batch N re-runs only before N+1 commits), so the
-    // batch_id < batchId cut is exactly the pre-batch state. Externally
-    // seeded indexes MUST carry the batch_id=-1 partition ([[seedMediaIndex]]):
-    // a non-partitioned seed would read whole for batch 0, but batch 0's
-    // survivor append then leaves root data files next to batch_id=0/ and
-    // every later read fails partition discovery (conflicting structures) —
-    // refuse up front instead of corrupting the dir.
-    val idx =
-      if (!hasIndex)
-        buildMediaIndex(batch.limit(0), idCol, hiCol, loCol, hiBits, loBits, modality)
-      else {
-        val raw = spark.read.parquet(indexDir)
-        require(raw.columns.contains("batch_id"),
-          s"mediaDedupBatch: index at $indexDir has no batch_id partition " +
-            "column; seed external indexes with seedMediaIndex (writes the " +
-            "batch_id=-1 partition) — a flat seed would break partition " +
-            "discovery after the first survivor append")
-        raw.filter(col("batch_id") < batchId).drop("batch_id")
-      }
+    val idx = BatchSnapshots.allBelow(batch.sparkSession, indexDir, batchId,
+      "batch_id",
+      buildMediaIndex(batch.limit(0), idCol, hiCol, loCol, hiBits, loBits, modality),
+      "seedMediaIndex")
     // one pass over the (bounded) batch feeds probe + report + advance:
     // cut the upstream lineage once so the three consumers don't recompute
     // the streaming source projection (the q146 rule)
@@ -690,17 +656,12 @@ object Multimodal {
       .select(col(idCol),
         col("__nm").isNotNull.as("is_dup"),
         coalesce(col("__nm"), lit(0L)).as("n_matches"),
-        col("__ms").as("min_seen_id"),
-        lit(batchId).as("batch_id"))
-    report.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(reportDir)
+        col("__ms").as("min_seen_id"))
+    BatchSnapshots.land(report, reportDir, batchId, "batch_id")
     val survivors = b.join(agg.select(idCol), Seq(idCol), "left_anti")
-    buildMediaIndex(survivors, idCol, hiCol, loCol, hiBits, loBits, modality)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexDir)
+    BatchSnapshots.land(
+      buildMediaIndex(survivors, idCol, hiCol, loCol, hiBits, loBits, modality),
+      indexDir, batchId, "batch_id")
   }
 
   /** foreachBatch sink: SAMPLE-LEVEL multimodal dedup at micro-batch
@@ -729,17 +690,12 @@ object Multimodal {
     * page with one swapped member re-enter the corpus through the stale
     * index).
     *
-    * Delivery: IDEMPOTENT under micro-batch retry — all four writes
-    * partition by `batch_id` with dynamic overwrite and every probe reads
-    * only `batch_id < batchId`. The three-dir advance is not a
-    * transaction, and doesn't need one: a crash between the writes leaves
-    * some dirs a partition short, the streaming replay re-runs the SAME
-    * batch, and every dir's partition is rewritten from the same
-    * deterministic inputs — the replay discipline IS the atomicity.
-    * Seed pre-history with [[seedMediaIndex]] (img/aud) and
-    * [[seedTextFpIndex]] (text); flat state dirs refuse loudly; compact
-    * any of the dirs with [[compactMediaIndex]] strictly below the
-    * replay barrier. */
+    * Delivery: replay-idempotent — all four dirs are in the
+    * [[graft.etl.BatchSnapshots]] append form under `batch_id` (whose
+    * replay discipline is also why the four-dir advance needs no
+    * transaction). Seed pre-history with [[seedMediaIndex]] (img/aud) and
+    * [[seedTextFpIndex]] (text); compact any of the dirs with
+    * [[compactMediaIndex]]. */
   def sampleDedupBatch(textFpDir: String, imgIdxDir: String, audIdxDir: String,
                        reportDir: String, idCol: String, textFpCol: String,
                        imgHiCol: String, imgLoCol: String,
@@ -748,44 +704,28 @@ object Multimodal {
                        audHiBits: Int = 8, audLoBits: Int = 8,
                        imgMaxHamming: Int = 1, audMaxHamming: Int = 0)
                       (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    def readState(dir: String, what: String): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val has = fs.exists(p) && fs.listStatus(p).exists { s =>
-        val n = s.getPath.getName
-        n.endsWith(".parquet") || n.startsWith("batch_id=")
-      }
-      if (!has) None
-      else {
-        val raw = spark.read.parquet(dir)
-        require(raw.columns.contains("batch_id"),
-          s"sampleDedupBatch: $what state at $dir has no batch_id partition " +
-            "column; seed with seedMediaIndex / seedTextFpIndex (batch_id=-1) — " +
-            "a flat seed would break partition discovery after the first append")
-        Some(raw.filter(col("batch_id") < batchId).drop("batch_id"))
-      }
-    }
+    def below(dir: String, empty: DataFrame, seedWith: String): DataFrame =
+      BatchSnapshots.allBelow(batch.sparkSession, dir, batchId, "batch_id",
+        empty, seedWith)
     // one lineage cut feeds three probes + report + three advances
     val b = batch.localCheckpoint()
-    def mediaDupFlag(dir: String, what: String, hiCol: String, loCol: String,
+    def mediaDupFlag(dir: String, hiCol: String, loCol: String,
                      hiBits: Int, loBits: Int, modality: String,
                      maxHamming: Int, flag: String): DataFrame = {
-      val idx = readState(dir, what).getOrElse(
-        buildMediaIndex(b.limit(0), idCol, hiCol, loCol, hiBits, loBits, modality))
+      val idx = below(dir, buildMediaIndex(b.limit(0), idCol, hiCol, loCol,
+        hiBits, loBits, modality), "seedMediaIndex")
       mediaIncrementalPairs(b, idx, idCol, hiCol, loCol,
           hiBits, loBits, modality, maxHamming)
         .select(col("batch_id").as(idCol)).distinct()
         .withColumn(flag, lit(true))
     }
-    val imgDup = mediaDupFlag(imgIdxDir, "image index", imgHiCol, imgLoCol,
+    val imgDup = mediaDupFlag(imgIdxDir, imgHiCol, imgLoCol,
       imgHiBits, imgLoBits, "img", imgMaxHamming, "__img")
-    val audDup = mediaDupFlag(audIdxDir, "audio index", audHiCol, audLoCol,
+    val audDup = mediaDupFlag(audIdxDir, audHiCol, audLoCol,
       audHiBits, audLoBits, "wav", audMaxHamming, "__aud")
-    val seenFp = readState(textFpDir, "text fingerprint")
-      .map(_.select(col("fp").as("__fp")))
-      .getOrElse(b.select(col(textFpCol).as("__fp")).limit(0))
-      .distinct()
+    val seenFp = below(textFpDir, b.select(col(textFpCol).as("fp")).limit(0),
+        "seedTextFpIndex")
+      .select(col("fp").as("__fp")).distinct()
     val txtDup = b.select(col(idCol), col(textFpCol).as("__fp"))
       .join(seenFp, "__fp")
       .select(idCol).distinct().withColumn("__txt", lit(true))
@@ -803,10 +743,7 @@ object Multimodal {
         col("img_dup").cast("long") + col("aud_dup").cast("long"))
       .localCheckpoint()
     def put(df: DataFrame, dir: String): Unit =
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
+      BatchSnapshots.land(df, dir, batchId, "batch_id")
     put(report, reportDir)
     val survivors = b.join(
       report.filter(!col("is_dup")).select(idCol), Seq(idCol), "left_semi")
@@ -818,49 +755,29 @@ object Multimodal {
   }
 
   /** Seed a [[sampleDedupBatch]] text-fingerprint dir from external
-    * history (the [[seedMediaIndex]] convention on the text modality):
-    * (id, fp) rows land under `batch_id=-1`. */
+    * history: (id, fp) rows land as the [[graft.etl.BatchSnapshots]] seed
+    * partition `batch_id=-1`. */
   def seedTextFpIndex(seen: DataFrame, dir: String, idCol: String,
                       fpCol: String): Unit =
-    seen.select(col(idCol), col(fpCol).as("fp"))
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    BatchSnapshots.seed(seen.select(col(idCol), col(fpCol).as("fp")), dir,
+      "batch_id")
 
   /** Seed a [[mediaDedupBatch]] index directory from an externally built
     * index frame ([[buildMediaIndex]] output — e.g. the one-time backfill
-    * over the historical corpus): the rows land under the `batch_id=-1`
-    * partition, so every micro-batch's `batch_id < batchId` probe cut
-    * (batchId ≥ 0) includes the seed, and survivor appends never mix root
-    * files with partition dirs. */
+    * over the historical corpus) as the [[graft.etl.BatchSnapshots]] seed
+    * partition `batch_id=-1`. */
   def seedMediaIndex(index: DataFrame, indexDir: String): Unit =
-    index.withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(indexDir)
+    BatchSnapshots.seed(index, indexDir, "batch_id")
 
   /** Fold the per-batch partitions of a [[mediaDedupBatch]] index that lie
-    * STRICTLY BELOW `upToBatchId` into the `batch_id=-1` pre-history
-    * partition (the [[seedMediaIndex]] convention) — the compaction the
-    * sink's scaladoc prescribes, as code. A streaming index accretes one
-    * small partition per micro-batch; scan cost grows with file count, not
-    * rows, until this folds them.
-    *
-    * `upToBatchId` is the REPLAY BARRIER and the caller must own it: pass
-    * the smallest batch id the streaming checkpoint could still replay
-    * (i.e. compact only batches whose successors have committed). Folding
-    * AT or ABOVE the barrier is refused by construction (strict `<`): if a
-    * replayed batch N found its own rows folded into batch_id=-1, the
-    * probe's `batch_id < N` cut would read batch N's own survivors as
-    * pre-batch state and misreport them as dups.
-    *
-    * Whole-directory staged swap ([[graft.etl.SnapshotIO]] discipline):
-    * the folded layout writes to a staging dir and renames in — a crash
-    * mid-compaction leaves the live index untouched, never half-folded. */
+    * STRICTLY BELOW the replay barrier `upToBatchId` into the
+    * `batch_id=-1` seed partition
+    * ([[graft.etl.BatchSnapshots.compactBatchPartitions]]). A streaming
+    * index accretes one small partition per micro-batch; scan cost grows
+    * with file count, not rows, until this folds them. */
   def compactMediaIndex(spark: SparkSession, indexDir: String,
                         upToBatchId: Long): Unit =
-    graft.etl.SnapshotIO.compactBatchPartitions(spark, indexDir, upToBatchId)
+    BatchSnapshots.compactBatchPartitions(spark, indexDir, upToBatchId)
 
   /** Fixture builder: wrap a text column as binary "media" (UTF-8) so the
     * plumbing is exercisable on the documents table. */

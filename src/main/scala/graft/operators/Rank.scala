@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.etl.BatchSnapshots
+
 /** Iterative graph ranking in EXACT fixed-point arithmetic.
   *
   * The reference's deepest graph-shaped analysis is the co-occurrence
@@ -549,13 +551,11 @@ object Rank {
   /** Persisted incremental triangle maintenance — the graph family's
     * §2.9 watermark member (the reference's co-occurrence edge list,
     * `scripts/SQL/Product_Association.sql:14-23`, grows by exactly this
-    * kind of 30-min basket delta). State under `stateDir`:
-    * `edges/batch_id=K/` (canonical edges first seen in batch K) and
-    * `meta/batch_id=K/` (that batch's edge/triangle increment). Replay
-    * discipline: the delta is computed against STRICTLY-EARLIER batches
-    * and lands via dynamic partition overwrite, so replaying a batch
-    * rewrites the same partition with the same content (the streaming
-    * sinks' batch_id idempotence). Returns the batch report
+    * kind of 30-min basket delta). State under `stateDir`, in the
+    * [[graft.etl.BatchSnapshots]] append form: `edges/batch_id=K/`
+    * (canonical edges first seen in batch K, the delta against
+    * strictly-earlier batches) and `meta/bid=K/` (that batch's
+    * edge/triangle increment). Returns the batch report
     * `(batch_id, n_edges_added, n_new_triangles)`. */
   def triangleBatch(stateDir: String)(edges: DataFrame,
                                       batchId: Long): DataFrame = {
@@ -563,28 +563,17 @@ object Rank {
     import spark.implicits._
     val edgesDir = s"$stateDir/edges"
     val cand = canonicalEdges(edges)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(edgesDir)
-    val old =
-      // no checkpoint: the seen graph re-reads from its own parquet, the
-      // cheap lineage — pinning it would materialize state-sized bytes
-      if (p.getFileSystem(hconf).exists(p))
-        spark.read.parquet(edgesDir)
-          .filter(col("batch_id") < batchId).select("u", "v")
-      else cand.limit(0).select("u", "v")
+    // no checkpoint: the seen graph re-reads from its own parquet, the
+    // cheap lineage — pinning it would materialize state-sized bytes
+    val old = BatchSnapshots.allBelow(spark, edgesDir, batchId, "batch_id",
+      cand.limit(0).select("u", "v"))
     val delta = cand.join(old, Seq("u", "v"), "left_anti").localCheckpoint()
     val newTri = triangleDeltaCount(old, delta)
     val nAdded = delta.count()
-    delta.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(edgesDir)
+    BatchSnapshots.land(delta, edgesDir, batchId, "batch_id")
     val report = Seq((batchId, nAdded, newTri))
       .toDF("batch_id", "n_edges_added", "n_new_triangles")
-    report.withColumn("bid", col("batch_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bid").parquet(s"$stateDir/meta")
+    BatchSnapshots.land(report, s"$stateDir/meta", batchId, "bid")
     report
   }
 
@@ -609,16 +598,13 @@ object Rank {
   /** `foreachBatch` sink maintaining the RESIDUAL PageRank state — the
     * rank sub-family's streaming member ([[pageRank]] batch,
     * [[pageRankPushAdvance]] incremental). Two persisted halves under
-    * `stateDir`:
-    *   - `edges/bid=K` — the APPEND half: canonical-new edges first seen
-    *     in batch K (batch rows anti-joined against strictly-earlier
-    *     batches, so a redelivered edge never double-folds), written
-    *     src-sorted so the push rounds' pushed-isin lookups prune the
-    *     seen graph at row-group grain;
-    *   - `state/bid=K` — the SNAPSHOT half (the [[graft.etl.BatchSnapshots]]
-    *     discipline): the residual state after batch K, re-derived from
-    *     the snapshot STRICTLY below K, so an at-least-once replay
-    *     rewrites both partitions with identical content.
+    * `stateDir`, in the two [[graft.etl.BatchSnapshots]] forms:
+    *   - `edges/bid=K` — the APPEND half: edges first seen in batch K
+    *     (anti-joined against strictly-earlier batches, so a redelivered
+    *     edge never double-folds), written src-sorted so the push rounds'
+    *     pushed-isin lookups prune the seen graph at row-group grain;
+    *   - `state/bid=K` — the SNAPSHOT half: the residual state after
+    *     batch K.
     * First batch bootstraps `x` with `bootstrapIters` power rounds over
     * the batch graph, then builds the exact in-sums ONCE; every later
     * batch pays only [[pageRankPushAdvance]]'s delta-neighborhood fold +
@@ -632,16 +618,14 @@ object Rank {
     import spark.implicits._
     val edgesDir = s"$stateDir/edges"
     val cand = edges.select(col("src"), col("dst")).distinct()
-    val old = graft.etl.BatchSnapshots.allBelow(spark, edgesDir, batchId,
-      Seq("src", "dst"), cand.limit(0))
+    val old = BatchSnapshots.allBelow(spark, edgesDir, batchId, "bid",
+      cand.limit(0))
     val delta = cand.join(old, Seq("src", "dst"), "left_anti")
       .localCheckpoint()
     val nAdded = delta.count()
-    delta.sortWithinPartitions("src").withColumn("bid", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bid").parquet(edgesDir)
-    graft.etl.BatchSnapshots.advanceAndLand(spark, s"$stateDir/state",
+    BatchSnapshots.land(delta.sortWithinPartitions("src"), edgesDir, batchId,
+      "bid")
+    BatchSnapshots.advanceAndLand(spark, s"$stateDir/state",
         batchId, Seq("node", "x", "s", "deg"), pageRankEmptyState(spark)) {
       prior =>
         if (prior.head(1).isEmpty)
@@ -657,7 +641,7 @@ object Rank {
     * state when the dir holds no snapshots yet. */
   def pageRankStateFrom(spark: org.apache.spark.sql.SparkSession,
                         stateDir: String): DataFrame =
-    graft.etl.BatchSnapshots.latest(spark, s"$stateDir/state",
+    BatchSnapshots.latest(spark, s"$stateDir/state",
       Seq("node", "x", "s", "deg"), pageRankEmptyState(spark))
 
   /** Exact triangle count via DEGREE-ORDERED edge orientation — the

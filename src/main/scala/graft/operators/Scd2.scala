@@ -60,7 +60,6 @@ object Scd2 {
   def merge(dim: DataFrame, incoming: DataFrame, keys: Seq[String], attrs: Seq[String],
             effectiveTs: Column, retireMissing: Boolean = false): DataFrame = {
     val in = incoming.select((keys ++ attrs).map(col): _*)
-    val attrState = struct(attrs.map(col): _*)
     val current = dim.filter(col("is_current"))
     val historical = dim.filter(!col("is_current"))
 

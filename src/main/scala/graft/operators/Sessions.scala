@@ -157,9 +157,7 @@ object Sessions {
     * [[advanceLate]] with `history` = the raw events persisted by strictly
     * earlier batches and `watermark` = their running max event time, so
     * the drained state equals a full re-sessionization for ANY event-time
-    * interleaving. All reads strictly-below-K, all writes dynamic-overwrite
-    * `bid=K` — an at-least-once replay rewrites identical bytes. Returns
-    * `(batch_id, n_sessions)`. */
+    * interleaving. Returns `(batch_id, n_sessions)`. */
   def sessionsBatch(stateDir: String, user: Column, ts: Column,
                     value: Column, gapSec: Long)
                    (batch: DataFrame, batchId: Long): DataFrame = {

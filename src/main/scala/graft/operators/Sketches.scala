@@ -157,8 +157,8 @@ object Sketches {
 
   /** foreachBatch sink: PERSISTED incremental CMS — the sketches family's
     * streaming member. Each micro-batch's OWN sketch (one d·w array row)
-    * lands under `batch_id=N/` via dynamic overwrite, so an at-least-once
-    * replay REPLACES its partition (the dedup sinks' discipline). CMS is
+    * lands under `batch_id=N/` ([[graft.etl.BatchSnapshots]] append form),
+    * so an at-least-once replay REPLACES its partition. CMS is
     * LINEAR — sketch(A ∪ B) = sketch(A) + sketch(B) element-wise — so the
     * table's sketch is just the element-wise sum of the landed rows, and
     * estimates from the advanced state are IDENTICAL to a from-scratch
@@ -166,13 +166,9 @@ object Sketches {
     * state path is result-invisible by linearity). State size:
     * batches × d·w int64s — bytes, not data. */
   def cmsBatch(dir: String, d: Int, w: Int)
-              (batch: DataFrame, batchId: Long): Unit = {
-    cmsSketch(batch, d, w)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
-  }
+              (batch: DataFrame, batchId: Long): Unit =
+    graft.etl.BatchSnapshots.land(cmsSketch(batch, d, w), dir, batchId,
+      "batch_id")
 
   /** The state's merged sketch: element-wise sum across batch partitions. */
   def readCmsState(spark: SparkSession, dir: String): DataFrame =
@@ -221,17 +217,14 @@ object Sketches {
   }
 
   /** foreachBatch sink: persisted incremental HLL — each batch's OWN
-    * registers land under `batch_id=N/` (dynamic overwrite, replay
-    * replaces); the table's registers are the element-wise MAX across
-    * batches, so the advanced state is IDENTICAL to registers built from
-    * the union. */
+    * registers land under `batch_id=N/` ([[graft.etl.BatchSnapshots]]
+    * append form, replay replaces); the table's registers are the
+    * element-wise MAX across batches, so the advanced state is IDENTICAL
+    * to registers built from the union. */
   def hllBatch(dir: String, groupCols: Seq[String], key: Column)
               (batch: DataFrame, batchId: Long): Unit =
-    hllRegisters(batch, groupCols, key)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    graft.etl.BatchSnapshots.land(hllRegisters(batch, groupCols, key), dir,
+      batchId, "batch_id")
 
   /** Merged registers of a landed HLL state (max across batches). */
   def readHllState(spark: SparkSession, dir: String,

@@ -49,11 +49,9 @@ object Skyline {
       col("x"), col("y"), buckets)
 
   /** Streaming skyline sink (`foreachBatch` target): the carried front is
-    * microscopic, so snapshot-per-batch persistence costs front-sized
-    * writes — advance(K) folds the batch against the latest snapshot
-    * strictly below K and lands under `front/bid=K` by dynamic partition
-    * overwrite (replay re-derives from the same predecessor → identical
-    * rewrite). Returns `(batch_id, front_size)`. */
+    * microscopic, so the [[graft.etl.BatchSnapshots]] snapshot form
+    * under `front/bid=K` costs front-sized writes. Returns
+    * `(batch_id, front_size)`. */
   def paretoBatch(stateDir: String, x: Column, y: Column,
                   buckets: Int = 64)(batch: DataFrame,
                                      batchId: Long): DataFrame = {

@@ -332,7 +332,7 @@ object WebDataset {
     * layouts (typically [[exportBatch]]'s accreted per-batch namespaces —
     * a day of micro-batches lands hundreds of under-budget shards) into
     * ONE budget-sized [[writeShards]] layout under `dstDir` — the
-    * container twin of [[graft.etl.SnapshotIO.compactBatchPartitions]],
+    * container twin of [[graft.etl.BatchSnapshots.compactBatchPartitions]],
     * closing the small-files problem on the container side: loaders and
     * object stores price file COUNT as well as bytes, and a crawl landing
     * at micro-batch grain fragments both.

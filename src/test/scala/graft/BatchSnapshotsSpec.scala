@@ -4,11 +4,13 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.etl.BatchSnapshots
+import graft.etl.{BatchSnapshots, EtlLog, SnapshotIO}
 
-/** The shared snapshot-per-batch discipline's edge contracts: a dir that
-  * exists but holds no parquet footers (post-compaction, marker files
-  * only) reads as the EMPTY state, never a schema-inference throw; and
+/** The shared per-batch state discipline's edge contracts: a dir that
+  * exists but holds no readable parquet (post-compaction, marker files
+  * only, a crashed overwrite's staging leftovers) reads as the EMPTY
+  * state, never a schema-inference throw; the append-form read takes the
+  * seed and every partition strictly below K; a flat dir refuses; and
   * `bid=K` snapshots are readable time travel — the state AT batch K.
   */
 class BatchSnapshotsSpec extends SparkSpec {
@@ -58,5 +60,43 @@ class BatchSnapshotsSpec extends SparkSpec {
       adv(Seq((1L, 1L))))
     assert(stateAt(1L) == Map(1L -> 11L, 2L -> 5L))
     assert(stateAt(2L) == Map(1L -> 11L, 2L -> 7L))
+  }
+
+  test("a dir holding only a crashed overwrite's .spark-staging-* parquet is the empty state") {
+    import spark.implicits._
+    val scratch = Files.createTempDirectory("graft_bsnap_part").toString
+    Seq((1L, 2L)).toDF("k", "v").write.parquet(s"$scratch/out")
+    val part = new java.io.File(s"$scratch/out").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    val dir = Files.createTempDirectory("graft_bsnap_staging").toString
+    Files.createDirectories(Paths.get(s"$dir/.spark-staging-1"))
+    Files.move(part.toPath, Paths.get(s"$dir/.spark-staging-1/${part.getName}"))
+    assert(!SnapshotIO.hasParquet(spark, dir))
+    assert(EtlLog.readWatermark(spark, dir, "orders").isEmpty)
+    assert(BatchSnapshots.allBelow(spark, dir, 0L, "bid", empty()).count() == 0L)
+    assert(BatchSnapshots.latest(spark, dir, Seq("k", "v"), empty()).count() == 0L)
+  }
+
+  test("allBelow reads the seed and every partition strictly below K; a flat dir refuses naming its seeder") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_bsnap_append").toString + "/state"
+    BatchSnapshots.seed(Seq((0L, 0L)).toDF("k", "v"), dir, "batch_id")
+    Seq(0L, 1L, 2L).foreach(b =>
+      BatchSnapshots.land(Seq((b + 1, b + 10)).toDF("k", "v"), dir, b, "batch_id"))
+    def keysBelow(b: Long): Set[Long] =
+      BatchSnapshots.allBelow(spark, dir, b, "batch_id", empty())
+        .as[(Long, Long)].collect().map(_._1).toSet
+    assert(keysBelow(0L) == Set(0L))
+    assert(keysBelow(2L) == Set(0L, 1L, 2L))
+    // a replay of batch 1 replaces its own partition, never appends to it
+    BatchSnapshots.land(Seq((2L, 11L)).toDF("k", "v"), dir, 1L, "batch_id")
+    assert(keysBelow(3L) == Set(0L, 1L, 2L, 3L))
+    assert(BatchSnapshots.allBelow(spark, dir, 3L, "batch_id", empty())
+      .filter($"k" === 2L).as[(Long, Long)].collect().toSeq == Seq((2L, 11L)))
+    val flat = Files.createTempDirectory("graft_bsnap_flat").toString + "/state"
+    Seq((0L, 0L)).toDF("k", "v").write.parquet(flat)
+    val e = intercept[IllegalArgumentException](
+      BatchSnapshots.allBelow(spark, flat, 0L, "batch_id", empty(), "seedSomething"))
+    assert(e.getMessage.contains("seedSomething"))
   }
 }

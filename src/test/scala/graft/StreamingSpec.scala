@@ -91,6 +91,38 @@ class StreamingSpec extends SparkSpec {
     assert(inc == full, s"$inc vs $full")
   }
 
+  test("triangleBatch and retentionBatch: an empty first micro-batch, then a non-empty one, equals the non-empty one alone") {
+    import graft.operators.{Aggregates, Rank}
+    // an empty batch lands no partition, only _SUCCESS: the next batch's
+    // state read must see "no state", not fail schema inference
+    def fresh(tag: String) = Files.createTempDirectory(tag).toString
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L))
+    def tri(dir: String, rows: Seq[(Long, Long)], id: Long) =
+      Rank.triangleBatch(dir)(rows.toDF("src", "dst"), id).collect().map(_.toSeq).toSeq
+    def triState(dir: String) = (
+      spark.read.parquet(s"$dir/edges").select("u", "v").as[(Long, Long)]
+        .collect().toSet,
+      Rank.triangleStateTotals(spark, dir).head().toSeq)
+    val (triAfterEmpty, triAlone) = (fresh("graft_tri_empty"), fresh("graft_tri_alone"))
+    tri(triAfterEmpty, Nil, 0L)
+    assert(tri(triAfterEmpty, edges, 1L) === tri(triAlone, edges, 1L))
+    assert(triState(triAfterEmpty) === triState(triAlone))
+    assert(triState(triAlone)._2 === Seq(5L, 2L))
+
+    val days = Seq((1L, ts("2024-01-01 10:00:00")), (1L, ts("2024-01-03 10:00:00")),
+      (2L, ts("2024-01-02 09:00:00")))
+    def ret(dir: String, rows: Seq[(Long, Timestamp)], id: Long) =
+      Aggregates.retentionBatch(dir, col("u"), col("ts"))(rows.toDF("u", "ts"), id)
+        .collect().map(_.toSeq).toSeq
+    def retState(dir: String) =
+      Aggregates.retentionMatrixFrom(spark, dir).collect().map(_.toSeq).toSet
+    val (retAfterEmpty, retAlone) = (fresh("graft_ret_empty"), fresh("graft_ret_alone"))
+    ret(retAfterEmpty, Nil, 0L)
+    assert(ret(retAfterEmpty, days, 1L) === ret(retAlone, days, 1L))
+    assert(retState(retAfterEmpty) === retState(retAlone))
+    assert(ret(retAlone, days, 1L) === Seq(Seq(1L, 3L)))
+  }
+
   test("rfmBatch sink: snapshot-per-batch monoid state; replay rewrites identically") {
     val dir = Files.createTempDirectory("graft_rfm_sink").toString
     def df(rows: Seq[(Long, String, Long)]) = rows.toDF("cust", "d", "cents")
