@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Per-round benchmark main: runs the registered queries against
@@ -13,13 +13,14 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * The timed action writes the whole result into Spark's `noop` sink and is
   * split into build (`fn(spark, dir)`, including the driver-side actions a
-  * query runs while it is built) and execute. A `.count()` would put an
+  * query runs while it is built) and execute. (A `.count()` would put an
   * Aggregate on top and let Catalyst drop whole subtrees the caller
-  * receives (q134 loses 23 of its 26 scan leaves), so `.count()` is timed
-  * apart as `count_sec_median` — the series the ledger `ref`s were
-  * recorded in. Each query run has its own job group; jobs, stages, tasks,
-  * task run time and shuffle bytes written are keyed by it and read after
-  * `spark.stop()`, which drains the listener bus.
+  * receives: q134 loses 23 of its 26 scan leaves.) [[step]] is that timed
+  * action, and the one way graft's measurement mains time a DataFrame
+  * ([[BenchIndexScale]] times its probes through it too). Each query run
+  * has its own job group; jobs, stages, tasks, task run time and shuffle
+  * bytes written are keyed by it and read after `spark.stop()`, which
+  * drains the listener bus.
   *
   * Untimed warm-up passes of the WHOLE suite precede timing so every
   * query's codegen/plan/scan caches are hot; each query is then timed
@@ -44,12 +45,11 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object Bench {
 
-  /** One run of one query, in seconds: `build` is `fn(spark, dir)`, `exec`
-    * the full result into the `noop` sink, `count` a separate
-    * `fn(spark, dir).count()`. A failure reads -1 and names the exception
-    * class — a failed query must never read as a fast one. */
-  final case class Sample(build: Double, exec: Double, count: Double,
-                          error: Option[String] = None) {
+  /** One timed run, in seconds: `build` constructs the DataFrame, `exec`
+    * writes its full result into the `noop` sink. A failure reads -1 and
+    * names the exception class — a failed run must never read as a fast
+    * one. */
+  final case class Sample(build: Double, exec: Double, error: Option[String] = None) {
     def full: Double = if (error.isEmpty) build + exec else -1.0
   }
 
@@ -94,35 +94,44 @@ object Bench {
     }
   }
 
-  /** Runs query `name` once under job group `group` (its `.count()` under
-    * `<group>/count`, so the group's counters are the full result's) and,
-    * when `planDir` is given, writes the query's formatted plan there. */
-  def runOnce(spark: SparkSession, sfDir: String, name: String, group: String,
-              planDir: Option[String] = None): Sample = {
+  /** Seconds `body` takes, and its value. */
+  def timed[A](body: => A): (Double, A) = {
+    val t0 = System.nanoTime()
+    val a = body
+    ((System.nanoTime() - t0) / 1e9, a)
+  }
+
+  /** The timing step: under job group `group`, times `build` — including
+    * any driver-side actions it runs — then the full result into the
+    * `noop` sink. `planFile`, when given, receives the formatted plan. A
+    * failure prints `[bench] <label> failed: …` on stderr and reads -1. */
+  def step(spark: SparkSession, group: String, label: String,
+           planFile: Option[Path] = None)(build: => DataFrame): Sample = {
     val sc = spark.sparkContext
     try {
-      val fn = SparkEntry.queries.getOrElse(name,
-        throw new NoSuchElementException(s"unknown query: $name"))
-      sc.setJobGroup(group, name)
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      val t1 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val t2 = System.nanoTime()
-      sc.setJobGroup(s"$group/count", name)
-      fn(spark, sfDir).count()
-      val t3 = System.nanoTime()
-      planDir.foreach { d =>
-        Files.createDirectories(Paths.get(d))
-        Files.write(Paths.get(d, s"$name.txt"), df.queryExecution
+      sc.setJobGroup(group, label)
+      val (buildSec, df) = timed(build)
+      val (execSec, _) = timed(df.write.format("noop").mode("overwrite").save())
+      planFile.foreach { f =>
+        Files.createDirectories(f.getParent)
+        Files.write(f, df.queryExecution
           .explainString(ExplainMode.fromString("formatted")).getBytes("UTF-8"))
       }
-      Sample((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
+      Sample(buildSec, execSec)
     } catch { case e: Throwable =>
-      System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-      Sample(-1, -1, -1, Some(e.getClass.getName))
+      System.err.println(s"[bench] $label failed: ${e.getClass.getName}: ${e.getMessage}")
+      Sample(-1, -1, Some(e.getClass.getName))
     } finally sc.clearJobGroup()
   }
+
+  /** Runs registered query `name` once through [[step]] and, when
+    * `planDir` is given, writes its plan to `<planDir>/<name>.txt`. */
+  def runOnce(spark: SparkSession, sfDir: String, name: String, group: String,
+              planDir: Option[String] = None): Sample =
+    step(spark, group, name, planDir.map(Paths.get(_, s"$name.txt"))) {
+      SparkEntry.queries.getOrElse(name,
+        throw new NoSuchElementException(s"unknown query: $name"))(spark, sfDir)
+    }
 
   private def medianOf(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -132,25 +141,27 @@ object Bench {
     else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 
-  private def ms(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
+  private[graft] def ms(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
 
-  /** One query's timed runs: medians over the successful samples (-1 only
-    * if every run failed), the full-result min, per-run median counters. */
+  /** One query's (or probe's) timed runs: medians over the successful
+    * samples (-1 only if every run failed), the full-result min, per-run
+    * median counters. */
   final case class Row(name: String, samples: Seq[Sample], counters: Seq[Counters]) {
     private val ok = samples.filter(_.error.isEmpty)
     val full: Double = medianOf(ok.map(_.full))
     val fullMin: Double = if (ok.isEmpty) -1.0 else ok.map(_.full).min
-    val count: Double = medianOf(ok.map(_.count))
     val error: Option[String] = samples.flatMap(_.error).headOption
     def counter(f: Counters => Long): Long =
       if (counters.isEmpty) 0L else counters.map(f).sorted.apply(counters.size / 2)
+    /** The counter fields, then `error` on failure. */
+    def layerJson: String =
+      s""""jobs":${counter(_.jobs)},"stages":${counter(_.stages)},"tasks":${counter(_.tasks)},""" +
+        s""""task_ms":${counter(_.taskMs)},"shuffle_bytes":${counter(_.shuffleBytes)}""" +
+        error.fold("")(e => s""","error":"$e"""")
     def json: String =
       s"""{"query":"$name","sec_median":${ms(full)},"sec_min":${ms(fullMin)},""" +
         s""""build_sec":${ms(medianOf(ok.map(_.build)))},"exec_sec":${ms(medianOf(ok.map(_.exec)))},""" +
-        s""""count_sec_median":${ms(count)},"jobs":${counter(_.jobs)},"stages":${counter(_.stages)},""" +
-        s""""tasks":${counter(_.tasks)},"task_ms":${counter(_.taskMs)},""" +
-        s""""shuffle_bytes":${counter(_.shuffleBytes)}""" +
-        error.fold("")(e => s""","error":"$e"""") + "}"
+        layerJson + "}"
   }
 
   def main(args: Array[String]): Unit = {
@@ -175,49 +186,37 @@ object Bench {
     val warm = (1 to warmups).map(i => pass(s"w$i", 1000L + i, planDir.filter(_ => i == 1)))
     val warmupTotal = warm.head.values.map(_.full).filter(_ >= 0).sum
 
-    // If the warm-up's full-result total already ran pathologically long
-    // the host is degraded (I/O and page-allocation throughput have been
-    // seen to oscillate minute-to-minute up to 10x) — fall back to a single
-    // timed pass. 420 s dates from the `.count()` series (warm-up ~270 s,
-    // including ~85 s of one-time fixture-cache builds, against a ~185 s
-    // timed pass at local[32]).
-    val degradeSec = 420.0
-    val degraded = warmupTotal > degradeSec
+    // A pathologically long warm-up means a degraded host (I/O and page
+    // allocation have been seen to swing 10x minute to minute): fall back
+    // to a single timed pass. 420 s dates from the `.count()` series.
+    val degraded = warmupTotal > 420.0
     val effRuns = if (degraded) 1 else runs
     val timed = (1 to effRuns).map(i => pass(s"t$i", 2000L + i, None))
     spark.stop() // drains the listener bus: every counter read below is final
 
     val results = names.map(n =>
       Row(n, timed.map(_(n)), (1 to effRuns).map(i => counters(s"$n@t$i"))))
-    // Round records keep only a 2000-char stdout TAIL (BENCH_r07.json:
-    // tail[-2000:], parsed=null): full per-query lines first, complete in
-    // the local log, then ONE budget-checked totals line LAST.
+    // per-query lines first, then ONE budget-checked totals line LAST
     results.foreach(r => println(r.json))
 
-    // ---- auto-isolation: self-adjudicate in-suite outliers against the
-    // committed ledger (bench_history.json / BENCH_HISTORY.md), whose refs
-    // are `.count()` medians: a query whose fresh `.count()` median exceeds
-    // 2x its ref re-runs ALONE in a FRESH JVM (warmups=3, runs=5 —
-    // JIT-clean, order-clean) and BOTH numbers ship. Worst 3 outliers only
-    // (bounded wall cost); small queries (< 0.75 s) skip — their variance
-    // is scheduler noise. Every round since r4 burned judge time proving
-    // some in-suite outlier (r4 q67/q50, r5 q45/q46/q47, r6 q77/q132) was a
-    // host artifact. ----
+    // ---- auto-isolation: a query whose full-result median exceeds 2x its
+    // ledger `full_ref` (bench_history.json) re-runs ALONE in a fresh JVM
+    // (warmups=3, runs=5: JIT-clean, order-clean) and both numbers ship.
+    // Worst 3 outliers only; queries under 0.75 s skip (scheduler noise).
+    // Rounds r4-r6 each spent time proving an in-suite outlier was a host
+    // artifact. ----
     val refs = historyRefs()
     val isolated: Seq[(String, Double)] =
       if (sys.env.contains("SPARK_GRAFT_NO_ISOLATE")) Seq.empty
       else results
         .flatMap(r => refs.get(r.name).collect {
-          case ref if ref > 0 && r.count > 0.75 && r.count > 2.0 * ref => (r.name, r.count / ref)
+          case ref if ref > 0 && r.full > 0.75 && r.full > 2.0 * ref => (r.name, r.full / ref)
         })
         .sortBy(-_._2).take(3)
         .flatMap { case (name, _) => isolateOne(name, sfDir) }
-    // Self-adjudicate in BOTH directions (r7: an isolated q90
-    // re-run landed in the same degraded host window and read as a
-    // confirmed regression): an isolated median still >2x the ref is
-    // "host-suspect" — the fork shares the host's I/O weather; only <=2x
-    // ("artifact") refutes the in-suite outlier. A real regression (r7
-    // q134) stays >2x across re-measures; a host artifact (r7 q90) does not.
+    // An isolated median still >2x the ref is "host-suspect" (the fork
+    // shares the host's weather: r7's isolated q90 read as a regression);
+    // only <=2x ("artifact") refutes the in-suite outlier.
     val isoEntries: Seq[(String, String, String)] = isolated.map { case (k, sec) =>
       val ref = refs.getOrElse(k, -1.0)
       val ratio = if (ref > 0) sec / ref else -1.0
@@ -234,17 +233,11 @@ object Bench {
       effRuns, if (degraded) Some(warmupTotal) else None))
   }
 
-  /** The FINAL line must fit WHOLE inside a 2000-char stdout
-    * tail (BENCH_r07.json stores exactly tail[-2000:] and its "parsed"
-    * field is null — 157 queries at 3 decimals already overflowed).
-    * Budget scheme: 2-decimal trailing-zero-trimmed medians, basename sf,
-    * short isolated entries; degrade to 1 decimal, then shrink the query
-    * map to the SLOWEST-N entries (failures always kept — a -1 must never
-    * be silently omitted) with an "omitted_fastest" count, until <= 1900.
-    * The isolation map (<= 3 short entries, ~150 chars) survives EVERY
-    * rung: r9 proved that dropping it first discards the run's own outlier
-    * adjudications exactly when they matter. A degraded run self-describes
-    * with its warm-up total (r8's silent runs:1 read 1.3-3.6x inflated). */
+  /** The FINAL line must fit WHOLE inside a 2000-char stdout tail (round
+    * records keep exactly tail[-2000:]). Budget: 2-decimal trimmed
+    * medians, then 1 decimal, then the SLOWEST-N queries (failures always
+    * kept) with an "omitted_fastest" count, until <= 1900. The isolation
+    * map survives every rung, and a degraded run names its warm-up total. */
   private def finalLine(results: Seq[Row], iso: Seq[(String, String)], sfDir: String,
                         runs: Int, degradedWarmup: Option[Double]): String = {
     def msTrim(v: Double, dp: Int): String =
@@ -277,10 +270,9 @@ object Bench {
     candidates.find(_.length <= 1900).getOrElse(candidates.last)
   }
 
-  /** Per-query reference medians from the committed ledger
-    * (`bench_history.json`, `ref` = min of the r4+ `.count()` medians — see
-    * BENCH_HISTORY.md). A missing or unreadable file means no isolation
-    * triggers (one stderr line says why) — the bench line still emits. */
+  /** Per-query `full_ref`s (min of the full-result medians recorded on the
+    * 4-core host) from `bench_history.json`. A missing or unreadable file
+    * means no isolation (one stderr line says why). */
   private def historyRefs(): Map[String, Double] = {
     def skip(why: String): Map[String, Double] = {
       System.err.println(s"[bench] ledger refs skipped: $why")
@@ -290,17 +282,15 @@ object Bench {
     if (!f.isFile) return skip("no bench_history.json in the working directory")
     try {
       val text = new String(Files.readAllBytes(f.toPath))
-      val re = """"(q[0-9]+[A-Za-z0-9_]*)":\s*\{[^}]*"ref":\s*([0-9.]+)""".r
+      val re = """"(q[0-9]+[A-Za-z0-9_]*)":\s*\{[^}]*"full_ref":\s*([0-9.]+)""".r
       re.findAllMatchIn(text).map(m => m.group(1) -> m.group(2).toDouble).toMap
     } catch { case e: Throwable => skip(e.toString) }
   }
 
-  /** Re-run ONE query in a fresh forked JVM (same classpath and JVM flags
-    * as this one — sbt forks runs, so java.class.path is the real app
-    * classpath) with warmups=3 / runs=5, and parse its `.count()` median
-    * back. Returns None, with one stderr line saying why, on launch
-    * failure, timeout (240 s), or parse failure — isolation is best-effort
-    * diagnostics, never a bench blocker. */
+  /** Re-run ONE query in a fresh forked JVM (this one's classpath and JVM
+    * flags) with warmups=3 / runs=5 and parse its full-result median back.
+    * None, with one stderr line saying why, on launch failure, timeout
+    * (240 s) or parse failure: isolation never blocks the bench. */
   private def isolateOne(name: String, sfDir: String): Option[(String, Double)] = {
     def skip(why: String): Option[(String, Double)] = {
       System.err.println(s"[bench] isolation of $name skipped: $why")
@@ -329,7 +319,7 @@ object Bench {
       if (!done) { proc.destroyForcibly(); return skip("no result within 240 s") }
       pump.join(5000)
       val re = ("\"query\":\"" + java.util.regex.Pattern.quote(name) +
-        "\"[^}]*\"count_sec_median\":([0-9.]+)").r
+        "\"[^}]*\"sec_median\":([0-9.]+)").r
       re.findAllMatchIn(buf.toString).toSeq.lastOption
         .map(m => name -> m.group(1).toDouble)
         .orElse(skip("the forked run printed no median"))

@@ -291,10 +291,14 @@ object Aggregates {
     Seq((batchId, nAdded)).toDF("batch_id", "n_days_added")
   }
 
-  /** The cohort matrix off a [[retentionBatch]] state dir. */
+  /** The cohort matrix off a [[retentionBatch]] state dir (empty when no
+    * batch has landed a day yet). */
   def retentionMatrixFrom(spark: org.apache.spark.sql.SparkSession,
-                          stateDir: String): DataFrame =
-    retentionMatrix(spark.read.parquet(s"$stateDir/days").select("_e", "_d"))
+                          stateDir: String): DataFrame = {
+    import spark.implicits._
+    retentionMatrix(graft.etl.BatchSnapshots.allBelow(spark, s"$stateDir/days",
+      Long.MaxValue, "batch_id", Seq.empty[(Long, java.sql.Date)].toDF("_e", "_d")))
+  }
 
   /** [[retentionCohorts]]-shaped matrix off the incremental state: cohorts
     * from the state's per-entity min day, cells by day offset. State rows

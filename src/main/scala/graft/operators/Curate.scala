@@ -35,20 +35,15 @@ import graft.functions.Text
   */
 object Curate {
 
-  final case class Funnel(stages: Seq[(String, DataFrame)],
-                          knownCounts: Map[String, Long] = Map.empty) {
+  final case class Funnel(stages: Seq[(String, DataFrame)]) {
     /** The cleaned corpus: survivors of the last stage. */
     def survivors: DataFrame = stages.last._2
-    /** (stage, n_docs) funnel counts as one plan. Stages whose count was
-      * already tallied during materialization ([[funnelPersisted]]) emit a
-      * literal — their count job already ran; everything else aggregates. */
+    /** (stage, n_docs) funnel counts as one plan: a union of one count
+      * aggregate per stage ([[funnelPersisted]]'s stages aggregate over
+      * their checkpointed frames). */
     def counts: DataFrame =
       stages.map { case (name, df) =>
-        knownCounts.get(name) match {
-          case Some(n) => df.sparkSession.range(1)
-            .select(lit(name).as("stage"), lit(n).as("n_docs"))
-          case None => df.agg(lit(name).as("stage"), count(lit(1)).as("n_docs"))
-        }
+        df.agg(lit(name).as("stage"), count(lit(1)).as("n_docs"))
       }.reduce(_ unionByName _)
   }
 

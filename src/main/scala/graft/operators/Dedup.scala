@@ -1473,8 +1473,7 @@ object Dedup {
   def repeatedSpansIncremental(batch: DataFrame, seenGrams: DataFrame,
                                idCol: String, textCol: String,
                                minLen: Int = 8,
-                               hashGrams: Boolean = true,
-                               probeViaBroadcast: Boolean = true): DataFrame = {
+                               hashGrams: Boolean = true): DataFrame = {
     val grams = anchorGrams(batch, idCol, textCol, minLen, hashGrams)
     val keys = gramKeys(hashGrams)
     val uniqInBatch = grams.groupBy(keys.map(col): _*)
@@ -1486,10 +1485,10 @@ object Dedup {
     // partition — and only 16-byte key pairs ever move. PROBE DIRECTION
     // matters at scale: a plain anti-join sorts/hashes the INDEX side per
     // batch (BENCH_INDEXSCALE measured 1.09 -> 4.52 s across a 25× index —
-    // the only non-flat curve in the trio). The broadcast form streams the
-    // stored index ONCE through a codegen'd broadcast-semi filter against
-    // the (tiny) batch key set — no index shuffle, no index sort, cost =
-    // one index scan (measured flat-to-1.5× at 25×) — then resolves the
+    // the only non-flat curve in the trio). This form streams the stored
+    // index ONCE through a codegen'd broadcast-semi filter against the
+    // (tiny) batch key set — no index shuffle, no index sort, cost = one
+    // index scan (measured flat-to-1.5× at 25×) — then resolves the
     // anti-join among two batch-bounded frames. The batch gram aggregate
     // deliberately computes twice (broadcast probe + final resolve): both
     // runs are batch-bounded, and an eager localCheckpoint here measured
@@ -1498,21 +1497,15 @@ object Dedup {
     // regression). Tradeoff is probe-direction-classic: at a TINY index
     // (index ≈ batch, the q134 fixture) the broadcast form pays ~25% extra
     // (Profile full-materialize: 5.9 s vs 4.7 s); at a 25× index it is 3×
-    // faster (BENCH_INDEXSCALE: 1.58 s vs 4.52 s) — the default serves the
-    // production regime (index ≫ batch). Set `probeViaBroadcast = false`
-    // for batches whose distinct gram count outgrows a broadcast (~10⁸
-    // keys): the shuffle form is then correct, paired with a
-    // bucketed-stored index.
-    val fresh = if (probeViaBroadcast) {
-      val seenHits = seenGrams.select(keys.map(col): _*)
-        .join(broadcast(uniqInBatch.select(keys.map(col): _*)), keys, "left_semi")
-      uniqInBatch
-        .join(broadcast(seenHits), keys, "left_anti")
-        .select(col(s"__o.$idCol").as(idCol), col("__o.p").as("p"))
-    } else
-      uniqInBatch
-        .join(seenGrams.select(keys.map(col): _*), keys, "left_anti")
-        .select(col(s"__o.$idCol").as(idCol), col("__o.p").as("p"))
+    // faster (BENCH_INDEXSCALE: 1.58 s vs 4.52 s) — it serves the
+    // production regime (index ≫ batch). A batch whose distinct gram count
+    // outgrows a broadcast (~10⁸ keys) needs the shuffled anti-join
+    // against a bucketed-stored index instead.
+    val seenHits = seenGrams.select(keys.map(col): _*)
+      .join(broadcast(uniqInBatch.select(keys.map(col): _*)), keys, "left_semi")
+    val fresh = uniqInBatch
+      .join(broadcast(seenHits), keys, "left_anti")
+      .select(col(s"__o.$idCol").as(idCol), col("__o.p").as("p"))
     val rep = grams.select(col(idCol), col("p"))
       .join(fresh, Seq(idCol, "p"), "left_anti")
     spanReport(batch, idCol, textCol, rep, minLen)

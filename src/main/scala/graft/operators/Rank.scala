@@ -502,23 +502,19 @@ object Rank {
     * triangle with j delta edges is enumerated exactly j times, so the
     * integer weight 6/(1+[ta=Δ]+[tb=Δ]) ∈ {6,3,2} sums to 6·T_new.
     *
-    * 100 TB shape (`broadcastDelta = true`, the micro-batch contract):
-    * the delta and the wedge-candidate set (Σ_{Δ} deg — delta-incident
-    * degree, bounded) BROADCAST, and the seen graph only STREAMS — two
-    * scans, zero shuffles of state, never a wedge self-join, never a
-    * recount (RankSpec plan-guards it; BenchIndexScale measures the flat
-    * curve). `broadcastDelta = false` is the corpus-vs-corpus fallback:
-    * same math through shuffled joins when the delta itself is too big
-    * to broadcast. A fresh seed falls out for free: with empty `old`
-    * only the all-delta term survives and equals the batch's full
-    * triangle count. */
-  def triangleDeltaCount(old: DataFrame, delta: DataFrame,
-                         broadcastDelta: Boolean = true): Long = {
+    * 100 TB shape (the micro-batch contract): the delta and the
+    * wedge-candidate set (Σ_{Δ} deg — delta-incident degree, bounded)
+    * BROADCAST, and the seen graph only STREAMS — two scans, zero
+    * shuffles of state, never a wedge self-join, never a recount
+    * (RankSpec plan-guards it; BenchIndexScale measures the flat curve).
+    * A fresh seed falls out for free: with empty `old` only the
+    * all-delta term survives and equals the batch's full triangle
+    * count. */
+  def triangleDeltaCount(old: DataFrame, delta: DataFrame): Long = {
     // materialization + emptiness tally in one action (Exec contract)
     val (d, nD) = Exec.materializeCounted(
       delta.select(col("u"), col("v")), "tri_delta")
     if (nD == 0L) return 0L
-    def bc(df: DataFrame): DataFrame = if (broadcastDelta) broadcast(df) else df
     val tagged = old.select(col("u"), col("v"), lit(0).as("t"))
       .unionAll(d.select(col("u"), col("v"), lit(1).as("t")))
     val symAll = tagged.select(col("u").as("a"), col("v").as("b"), col("t"))
@@ -527,14 +523,14 @@ object Rank {
     // (one scan of the seen graph; the delta broadcasts into it)
     val wedges = symAll.select(col("a").as("u"), col("b").as("w"),
         col("t").as("ta"))
-      .join(bc(d), "u")
+      .join(broadcast(d), "u")
       .select(col("v"), col("w"), col("ta"))
     // closing edges {v,w}: the second scan, candidates broadcast into it;
     // inner join keeps one row PER WEDGE (adjacency is simple), so the
     // weighted count is exact
     val closed = symAll.select(col("a").as("v"), col("b").as("w"),
         col("t").as("tb"))
-      .join(bc(wedges), Seq("v", "w"))
+      .join(broadcast(wedges), Seq("v", "w"))
     val six = closed.agg(sum(
         when(col("ta") + col("tb") === 0, 6L)
           .when(col("ta") + col("tb") === 1, 3L)

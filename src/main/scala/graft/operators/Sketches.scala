@@ -226,12 +226,18 @@ object Sketches {
     graft.etl.BatchSnapshots.land(hllRegisters(batch, groupCols, key), dir,
       batchId, "batch_id")
 
-  /** Merged registers of a landed HLL state (max across batches). */
+  /** Merged registers of a landed HLL state (max across batches); empty,
+    * with STRING group columns, when no batch has landed registers yet. */
   def readHllState(spark: SparkSession, dir: String,
-                   groupCols: Seq[String]): DataFrame =
-    spark.read.parquet(dir)
+                   groupCols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(groupCols.map(StructField(_, StringType)) ++
+        Seq(StructField("j", LongType), StructField("m", IntegerType))))
+    graft.etl.BatchSnapshots.allBelow(spark, dir, Long.MaxValue, "batch_id", empty)
       .groupBy((groupCols.map(col) :+ col("j")): _*)
       .agg(max(col("m")).as("m"))
+  }
 
   /** Raw HLL estimates from register rows: `alpha·m²/S` with
     * `S = Σ_j 2^(-M_j)` (absent registers contribute 1). Every term is a

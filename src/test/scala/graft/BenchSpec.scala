@@ -33,17 +33,14 @@ class BenchSpec extends SparkSpec {
       rows.values.foreach { r =>
         val s = r.samples.head
         assert(s.error.isEmpty, r.json)
-        assert(s.build >= 0 && s.exec >= 0 && s.count >= 0, r.json)
+        assert(s.build >= 0 && s.exec >= 0, r.json)
         assert(r.full == s.build + s.exec, r.json)
         assert(r.counter(_.jobs) >= 1 && r.counter(_.tasks) >= 1, r.json)
-        assert(r.json.contains("\"count_sec_median\":"), r.json)
       }
       // q24 ran between q1's two runs: with counters keyed by job group its
       // jobs land on neither q1 run, so both q1 runs count the same
       val (a, a2) = (counters("bench-spec/a"), counters("bench-spec/a2"))
       assert((a.jobs, a.stages, a.tasks) == (a2.jobs, a2.stages, a2.tasks))
-      // the `.count()` runs are counted apart from the full result
-      assert(counters("bench-spec/b/count").jobs >= 1)
     } finally spark.sparkContext.removeSparkListener(counters)
   }
 
@@ -58,7 +55,7 @@ class BenchSpec extends SparkSpec {
     assert(missingDir.full == -1.0)
 
     val row = Bench.Row("q1_pricing_summary", Seq(missingDir), Seq(Bench.Counters()))
-    assert(row.full == -1.0 && row.count == -1.0)
+    assert(row.full == -1.0)
     assert(row.json.contains("\"sec_median\":-1,"), row.json)
     assert(row.json.contains("\"error\":\"" + missingDir.error.get + "\""), row.json)
   }

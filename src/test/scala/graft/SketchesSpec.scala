@@ -232,4 +232,14 @@ class SketchesSpec extends SparkSpec {
     val e = est.getAs[Double]("raw_est")
     assert(math.abs(e - 5000.0) / 5000.0 < 0.10, s"raw_est $e too far from 5000")
   }
+
+  test("readHllState after only an empty hllBatch is an empty register set") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_hll_empty").toString + "/state"
+    Sketches.hllBatch(dir, Seq("g"), col("k"))(Seq.empty[(String, Long)].toDF("g", "k"), 0L)
+    val regs = Sketches.readHllState(spark, dir, Seq("g"))
+    assert(regs.columns.toSeq == Seq("g", "j", "m"))
+    assert(regs.collect().isEmpty)
+    assert(Sketches.hllEstimate(regs, Seq("g")).collect().isEmpty)
+  }
 }

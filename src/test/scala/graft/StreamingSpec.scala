@@ -123,6 +123,15 @@ class StreamingSpec extends SparkSpec {
     assert(ret(retAlone, days, 1L) === Seq(Seq(1L, 3L)))
   }
 
+  test("retentionMatrixFrom after only an empty retentionBatch is an empty matrix") {
+    val dir = Files.createTempDirectory("graft_ret_only_empty").toString
+    graft.operators.Aggregates.retentionBatch(dir, col("u"), col("ts"))(
+      Seq.empty[(Long, Timestamp)].toDF("u", "ts"), 0L).collect()
+    val m = graft.operators.Aggregates.retentionMatrixFrom(spark, dir)
+    assert(m.columns.toSeq === Seq("cohort_day", "day_offset", "active_users"))
+    assert(m.collect().isEmpty)
+  }
+
   test("rfmBatch sink: snapshot-per-batch monoid state; replay rewrites identically") {
     val dir = Files.createTempDirectory("graft_rfm_sink").toString
     def df(rows: Seq[(Long, String, Long)]) = rows.toDF("cust", "d", "cents")

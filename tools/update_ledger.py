@@ -1,18 +1,16 @@
 #!/usr/bin/env python3
 """Fold one `graft.Bench` log into the bench ledger (bench_history.json).
 
-Usage: update_ledger.py <bench_log> <round_key> <full|count> [ledger_path]
+Usage: update_ledger.py <bench_log> <round_key> full [ledger_path]
 
-Two series live side by side in each query's row and never mix:
+Writes the full-result medians (`sec_median`, the noop-sink write) as
+`full_<round_key>` and lowers `full_ref` where the new median beats it;
+Bench's auto-isolation judges its full-result medians against `full_ref`.
+The older `.count()` series (`<round_key>`/`ref`) is history: nothing
+writes it any more.
 
-  full   the full-result medians (`sec_median`, the noop-sink write),
-         stored as `full_<round_key>`; `full_ref` is the min of the series.
-  count  the `.count()` medians (`count_sec_median`), stored as
-         `<round_key>`; `ref` is lowered where the new median beats it.
-         Bench's auto-isolation judges the `.count()` series against `ref`.
-
-A round key already present in the chosen series is refused, so a round is
-never silently overwritten. Every value the run does not write stays
+A round key already present is refused, so a round is never silently
+overwritten. Every value the run does not write stays
 byte-identical. Failed queries (-1) are skipped. The ledger path defaults to
 bench_history.json at the repository root.
 """
@@ -23,21 +21,20 @@ import sys
 
 
 def main(argv):
-    if len(argv) not in (4, 5) or argv[3] not in ("full", "count"):
+    if len(argv) not in (4, 5) or argv[3] != "full":
         sys.exit(__doc__)
-    log, rk, series = argv[1], argv[2], argv[3]
+    log, rk = argv[1], argv[2]
     path = argv[4] if len(argv) == 5 else os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "..", "bench_history.json")
-    field = "sec_median" if series == "full" else "count_sec_median"
-    key, ref = (f"full_{rk}", "full_ref") if series == "full" else (rk, "ref")
+    key, ref = f"full_{rk}", "full_ref"
 
     meds = {}
-    pat = r'\{"query":"(q[^"]+)",[^}]*?"' + field + r'":([-\d.]+)'
+    pat = r'\{"query":"(q[^"]+)","sec_median":([-\d.]+)'
     for m in re.finditer(pat, open(log).read()):
         if float(m.group(2)) > 0:
             meds[m.group(1)] = float(m.group(2))
     if not meds:
-        sys.exit(f"no per-query {field} lines in {log}")
+        sys.exit(f"no per-query sec_median lines in {log}")
 
     with open(path) as f:
         led = json.load(f)
